@@ -13,7 +13,6 @@ A volume directory layout:
     <base>/info                          # precomputed-compatible JSON
     <base>/chunks/_manifest-<gen>.json   # numbered snapshot log (newest wins)
     <base>/chunks/data/<commit>/pm=<m>/ps=<s>/*.parquet  # immutable slab dirs
-    (pre-manifest tables: <base>/chunks/mip=<m>/slab=<s>/*.parquet, legacy path)
 """
 
 from __future__ import annotations

@@ -109,9 +109,10 @@ class CommitConflictError(RuntimeError):
 
 
 class ManifestError(RuntimeError):
-    """The chunk table's manifest pointer is unreadable on a
-    manifest-layout table — never silently fall back to scanning all
-    retained generations, which would serve stale/duplicate chunks."""
+    """The chunk table's manifest is unreadable, or the table is in a
+    layout this engine no longer reads — never silently fall back to
+    scanning all retained generations, which would serve
+    stale/duplicate chunks."""
 
 
 def _label_to_signed(v) -> int:
@@ -279,7 +280,8 @@ class Volume:
              as_of=None) -> "Volume":
         """Open a volume, following info ``redirect`` links (reference
         ``metadata.py:224-293``). A redirected volume opens read-only,
-        matching the reference's ReadOnlyException on write.
+        matching the reference's ReadOnlyException on write. A table in
+        a pre-manifest layout raises :class:`ManifestError`.
 
         ``generation=N`` opens a TIME-TRAVEL snapshot: every read
         resolves manifest generation ``N`` exactly as it was published
@@ -304,6 +306,7 @@ class Volume:
         info = VolumeInfo.load(base_path, max_redirects=max_redirects)
         vol = cls(spark, info.base_path or base_path, info)
         vol.read_only = bool(info.redirected_from)
+        vol._manifest_generations()  # refuses an unsupported layout
         if as_of is not None:
             generation, man = vol._generation_as_of(as_of)
             vol._probe_generation_dirs(man)  # dirs, not just manifest
@@ -316,17 +319,6 @@ class Volume:
                 # publish — the same pinned-empty-snapshot definition
                 # changes(0) and restore(0) use (_generation_or_raise);
                 # there is no manifest-000000000000.json file to load.
-                # A legacy hive table or interim single-pointer table
-                # has data but no numbered generations — serving either
-                # as "empty generation 0" would silently hide every
-                # chunk (restore/compact raise the same way)
-                if vol._is_legacy_layout() or vol._fs.exists(
-                        f"{vol.chunks_path}/_manifest.json"):
-                    raise ManifestError(
-                        "open(generation=0) requires the numbered "
-                        "snapshot-manifest layout — this table is "
-                        "legacy hive or interim single-pointer; run "
-                        "migrate_to_manifest() first")
                 vol._pinned_manifest = {"generation": 0, "entries": {}}
             else:
                 vol._read_manifest()  # fail fast on vacuumed/absent pin
@@ -344,7 +336,7 @@ class Volume:
         unparseable) is skipped — that commit never happened — but a
         READ failure raises: silently falling past an unreadable
         generation would pin an older snapshot and serve stale data as
-        current. Interim single-pointer tables resolve their pointer."""
+        current."""
         import time
         from datetime import datetime, timezone
 
@@ -359,14 +351,10 @@ class Volume:
             ts = ts.timestamp()
         ts = float(ts)
         gens = self._manifest_generations()
-        candidates = [(g, self._manifest_file(g)) for g in gens]
-        if not gens:
-            pointer = f"{self.chunks_path}/_manifest.json"
-            if self._fs.exists(pointer):
-                candidates = [(None, pointer)]
         unstamped = None  # newest readable generation with no stamp
         saw_stamped = False
-        for g, path in candidates:
+        for g in gens:
+            path = self._manifest_file(g)
             raw, err = self._read_bytes_retry(path)
             if err is not None:
                 raise ManifestError(
@@ -378,16 +366,15 @@ class Volume:
                 man = json.loads(raw.decode())
             except Exception:
                 continue  # torn husk: that commit never happened
-            if g is not None:
-                man["generation"] = int(g)
+            man["generation"] = int(g)
             at = man.get("committed_at")
             if at is None:
                 if unstamped is None:
-                    unstamped = (int(man.get("generation") or 0), man)
+                    unstamped = (int(g), man)
                 continue  # keep looking for a stamped qualifier
             saw_stamped = True
             if float(at) <= ts:
-                return int(man.get("generation") or 0), man
+                return int(g), man
         if unstamped is not None and not saw_stamped:
             # a PURE pre-stamp table: every retained generation predates
             # commit stamping, so no ordering vs ts is derivable at all
@@ -475,9 +462,8 @@ class Volume:
     # generation file. Old generations' dirs stay until :meth:`vacuum`.
     # This is the Delta/Iceberg commit protocol SCALE.md previously
     # listed as the production swap, implemented directly over the same
-    # parquet layout. Tables written before the manifest (hive
-    # mip=/slab= dirs) keep working through the legacy read/commit
-    # path; the layout is detected per table.
+    # parquet layout. It is the only layout: a table with no published
+    # generation is empty.
 
     @property
     def slab_shift(self) -> int:
@@ -485,8 +471,8 @@ class Volume:
         Immutable once the first generation publishes — slab values are
         baked into every stored row and dir name, so reads MUST use the
         writing shift or candidate-slab pruning silently misses data.
-        Resolved from the newest manifest; legacy tables and tables
-        with no published generation use the construction default."""
+        Resolved from the newest manifest; tables with no published
+        generation use the construction default."""
         if self._slab_shift_resolved is None:
             try:
                 man = self._read_manifest()
@@ -518,21 +504,39 @@ class Volume:
         Delta's transaction log), NOT a replaced pointer: a new
         generation is one atomic object PUT, so there is no window in
         which no manifest exists, and a torn newest file simply means
-        that commit never happened (readers fall back one generation)."""
+        that commit never happened (readers fall back one generation).
+
+        Every manifest resolve lists here, so this is also where a
+        pre-manifest table is refused: hive ``mip=`` dirs or the single
+        ``_manifest.json`` pointer with no numbered generation raise
+        :class:`ManifestError` instead of reading as an empty table."""
+        names = self._fs.listdir(self.chunks_path)
         out = []
-        for n in self._fs.listdir(self.chunks_path):
+        for n in names:
             if n.startswith(MANIFEST_PREFIX) and n.endswith(".json"):
                 try:
                     out.append(int(n[len(MANIFEST_PREFIX):-5]))
                 except ValueError:
                     continue
+        if not out:
+            if "_manifest.json" in names:
+                old = "single-pointer manifest (_manifest.json)"
+            elif any(n.startswith("mip=") for n in names):
+                old = "hive partition (mip=/slab= dirs)"
+            else:
+                old = None
+            if old is not None:
+                raise ManifestError(
+                    f"chunk table {self.chunks_path!r} uses the {old} "
+                    "layout, which is no longer supported: only the "
+                    f"numbered snapshot manifest ({MANIFEST_PREFIX}<gen>"
+                    ".json) is read")
         return sorted(out, reverse=True)
 
     def _read_manifest(self) -> Optional[dict]:
         """The newest readable manifest dict, or None ONLY for a table
-        with no published generation (legacy hive table, no table yet,
-        or a first commit that crashed before publishing — correctly an
-        empty table).
+        with no published generation (no table yet, or a first commit
+        that crashed before publishing — correctly an empty table).
 
         A torn/corrupt newest file falls back to the previous
         generation (that commit never completed). If generations exist
@@ -567,19 +571,6 @@ class Volume:
                 )
         gens = self._manifest_generations()
         if not gens:
-            # interim single-pointer format (one short-lived revision of
-            # this protocol wrote chunks/_manifest.json): honor it so
-            # such tables neither read as empty nor get superseded by a
-            # generation-1 publish that forgets their entries
-            pointer = f"{self.chunks_path}/_manifest.json"
-            if self._fs.exists(pointer):
-                try:
-                    return json.loads(self._fs.read_bytes(pointer).decode())
-                except Exception as e:
-                    raise ManifestError(
-                        f"legacy manifest pointer {pointer!r} is "
-                        f"unreadable: {e!r}"
-                    )
             return None
         err: Optional[Exception] = None
         for g in gens[:3]:
@@ -594,19 +585,6 @@ class Volume:
             "manifest file — scanning all retained generations instead "
             "would silently serve stale/duplicate chunks"
         )
-
-    def _is_legacy_layout(self) -> bool:
-        """True for a pre-manifest table: hive mip= dirs and no
-        published manifest. A ``data/`` dir WITHOUT a manifest does not
-        flip the verdict — that is a crashed migration/first commit
-        whose staging never published, and the hive dirs (if present)
-        remain the committed truth."""
-        names = self._fs.listdir(self.chunks_path)
-        if any(n.startswith(MANIFEST_PREFIX) for n in names):
-            return False
-        if "_manifest.json" in names:  # interim single-pointer format
-            return False
-        return any(n.startswith("mip=") for n in names)
 
     @staticmethod
     def _manifest_dirs(man: dict, root: str, mip: Optional[int] = None,
@@ -632,45 +610,22 @@ class Volume:
                   manifest=_UNRESOLVED) -> DataFrame:
         """The chunk table as a DataFrame. ``mip``/``slabs`` are
         pruning HINTS (never a semantic filter — matching WHERE clauses
-        are applied too): on a manifest table they restrict the scan to
-        the referenced dirs before any file is listed; on a legacy
-        table they become partition-pruned predicates. ``manifest``
+        are applied too): they restrict the scan to the referenced dirs
+        before any file is listed. ``manifest``
         lets a caller thread an already-resolved snapshot through
         (commit paths MUST, so their read and their CAS share one
         generation)."""
         man = self._read_manifest() if manifest is Volume._UNRESOLVED \
             else manifest
-        if man is not None:
-            dirs = self._manifest_dirs(man, self.chunks_path,
-                                       mip=mip, slabs=slabs)
-            if not dirs:
-                df = self.spark.createDataFrame([], schema=CHUNK_SCHEMA)
-            else:
-                df = self.spark.read.schema(CHUNK_SCHEMA).parquet(*dirs)
-        elif self._is_legacy_layout():
-            # hive table (incl. one whose migration crashed after
-            # staging but before publishing — the hive dirs remain the
-            # committed truth). Explicit mip= roots + basePath keep the
-            # partition columns while never descending into a stray
-            # staged data/ dir (mixed structures would error)
-            mip_dirs = [
-                f"{self.chunks_path}/{n}"
-                for n in self._fs.listdir(self.chunks_path)
-                if n.startswith("mip=")
-            ]
-            df = (
-                self.spark.read.schema(CHUNK_SCHEMA)
-                .option("basePath", self.chunks_path)
-                .parquet(*mip_dirs)
-            )
-        elif self._fs.exists(f"{self.chunks_path}/data"):
-            # data dirs but NO published generation and no hive dirs: a
-            # first commit that crashed after staging. Nothing was ever
-            # committed — the table is EMPTY; a recursive scan here
-            # would serve the crashed commit's uncommitted rows
+        # no published generation (incl. a first commit that crashed
+        # after staging) is an EMPTY table: a recursive scan would
+        # serve uncommitted rows
+        dirs = [] if man is None else self._manifest_dirs(
+            man, self.chunks_path, mip=mip, slabs=slabs)
+        if not dirs:
             df = self.spark.createDataFrame([], schema=CHUNK_SCHEMA)
         else:
-            df = self.spark.read.schema(CHUNK_SCHEMA).parquet(self.chunks_path)
+            df = self.spark.read.schema(CHUNK_SCHEMA).parquet(*dirs)
         if mip is not None:
             df = df.where(F.col("mip") == int(mip))
         if slabs is not None:
@@ -806,17 +761,11 @@ class Volume:
 
     def has_data(self, mip: int) -> bool:
         """Reference ``image/__init__.py:102-118``."""
-        from pyspark.errors import AnalysisException
         man = self._read_manifest()
-        if man is not None:
-            prefix = f"{int(mip)}/"
-            return any(k.startswith(prefix) for k in man["entries"])
-        if not self._fs.exists(self.chunks_path):
+        if man is None:
             return False
-        try:
-            return len(self.chunks_df().where(F.col("mip") == mip).take(1)) > 0
-        except AnalysisException:  # table dir exists but holds no parquet
-            return False
+        prefix = f"{int(mip)}/"
+        return any(k.startswith(prefix) for k in man["entries"])
 
     def _candidate_slabs(self, bbox: Bbox, mip: int):
         """Slab ids a bbox can touch (``morton >> SLAB_SHIFT`` over the
@@ -906,29 +855,23 @@ class Volume:
                 return []
             filt = filt & pc.field("slab").isin(slabs)
         man = self._read_manifest()
+        if man is None:
+            return []
         try:
-            if man is not None:
-                # manifest prune: list only the referenced dirs for the
-                # selected (mip, slab) keys — the snapshot the Spark
-                # reader would also resolve
-                dirs = self._manifest_dirs(man, local, mip=int(mip),
-                                           slabs=slabs)
-                files = [
-                    os.path.join(d, f)
-                    for d in dirs
-                    for f in sorted(os.listdir(d))
-                    if f.endswith(".parquet")
-                ]
-                if not files:
-                    return []
-                dset = pads.dataset(files, format="parquet")
-            else:
-                if os.path.isdir(os.path.join(local, "data")):
-                    # crashed-migration mix (hive dirs + staged data/):
-                    # let the Spark path handle the explicit-dir read
-                    return None
-                dset = pads.dataset(local, format="parquet",
-                                    partitioning="hive")
+            # manifest prune: list only the referenced dirs for the
+            # selected (mip, slab) keys — the snapshot the Spark reader
+            # would also resolve
+            dirs = self._manifest_dirs(man, local, mip=int(mip),
+                                       slabs=slabs)
+            files = [
+                os.path.join(d, f)
+                for d in dirs
+                for f in sorted(os.listdir(d))
+                if f.endswith(".parquet")
+            ]
+            if not files:
+                return []
+            dset = pads.dataset(files, format="parquet")
             tbl = dset.to_table(columns=columns, filter=filt)
         except FileNotFoundError:
             # a file the manifest referenced vanished between listing
@@ -1223,15 +1166,9 @@ class Volume:
         without touching the table if another writer holds it; the
         numbered-file publish (create-if-absent of generation N+1)
         additionally turns any broken-stale-lock interleave into a
-        loud conflict.
-
-        Tables created before the manifest (hive ``mip=``/``slab=``
-        layout) commit through the legacy rename-swap path unchanged."""
+        loud conflict."""
         self._lru_clear()
         with self._commit_lock():
-            if self._is_legacy_layout():
-                self._overwrite_slabs_legacy(out, drop, replace_mips)
-                return
             man = self._read_manifest() if snapshot is Volume._UNRESOLVED \
                 else snapshot
             self._require_slab_shift(man)
@@ -1325,10 +1262,6 @@ class Volume:
         compaction; beyond-reference surface.)"""
         self._lru_clear()
         with self._commit_lock():
-            if self._is_legacy_layout():
-                raise ManifestError(
-                    "compact() requires the snapshot-manifest layout — "
-                    "run migrate_to_manifest() first")
             man = self._read_manifest()
             if man is None:
                 return 0
@@ -1399,10 +1332,6 @@ class Volume:
         scales never unregister.)"""
         self._lru_clear()
         with self._commit_lock():
-            if self._is_legacy_layout():
-                raise ManifestError(
-                    "restore() requires the snapshot-manifest layout — "
-                    "run migrate_to_manifest() first")
             man = self._read_manifest()
             if man is None:
                 raise ManifestError(
@@ -1416,7 +1345,7 @@ class Volume:
                 raise CommitConflictError(
                     f"generation {generation} was written at slab_shift "
                     f"{target['slab_shift']} but the table now uses "
-                    f"{self.slab_shift} (a migration ran since) — "
+                    f"{self.slab_shift} — "
                     "restoring would mix slab granularities")
             self._publish_manifest(
                 dict(target["entries"]),
@@ -1622,13 +1551,7 @@ class Volume:
         ``trigger(availableNow=True)`` gives incremental batch
         consumption; a continuous trigger tails commits as they land.
         """
-        man = self._read_manifest()
-        if man is None and self._is_legacy_layout():
-            raise ManifestError(
-                "stream_changes() requires the snapshot-manifest "
-                "layout (the feed is written at manifest publish) — "
-                "run migrate_to_manifest() first"
-            )
+        self._read_manifest()  # fail fast on an unreadable table
         self._fs.makedirs(f"{self.chunks_path}/feed")
         # Backfill computable gaps BEFORE the source lists the dir: on
         # a table whose generations predate the feed (upgrade, or a
@@ -2010,15 +1933,7 @@ class Volume:
             new = self._generation_or_raise(to_generation,
                                             probe_dirs=False)
         else:
-            new = self._read_manifest()
-            if new is None:
-                if self._is_legacy_layout():
-                    raise ManifestError(
-                        "changes() requires the snapshot-manifest "
-                        "layout (the feed is the manifest log) — run "
-                        "migrate_to_manifest() first"
-                    )
-                new = {"entries": {}}
+            new = self._read_manifest() or {"entries": {}}
         rows = [self._change_row(k, od, nd)
                 for k, od, nd in self._changed_keys(old, new)]
         return self.spark.createDataFrame(
@@ -2042,15 +1957,7 @@ class Volume:
         ride that same snapshot — a commit landing mid-call can never
         make the feed inconsistent with the rows it returns. The diff
         itself is pure driver-side dict work (no Spark job)."""
-        man = self._read_manifest()
-        if man is None:
-            if self._is_legacy_layout():
-                raise ManifestError(
-                    "changed_chunks_df() requires the snapshot-manifest "
-                    "layout (the feed is the manifest log) — run "
-                    "migrate_to_manifest() first"
-                )
-            man = {"entries": {}}
+        man = self._read_manifest() or {"entries": {}}
         old = self._generation_or_raise(from_generation,
                                         probe_dirs=False)
         by_mip: dict = {}
@@ -2103,35 +2010,6 @@ class Volume:
                             "entries": None, "slab_shift": None,
                             "committed_at": None, "data_change": None,
                             "mips": None, "empty_mips": None})
-        if not out:
-            # interim single-pointer format: _read_manifest still
-            # serves chunks/_manifest.json, so history() must report
-            # that live generation rather than claim the table has no
-            # commits
-            pointer = f"{self.chunks_path}/_manifest.json"
-            if self._fs.exists(pointer):
-                row = {"generation": None, "readable": False,
-                       "entries": None, "slab_shift": None,
-                       "committed_at": None, "data_change": None,
-                       "mips": None, "empty_mips": None,
-                       "interim_pointer": True}
-                try:
-                    man = json.loads(self._fs.read_bytes(pointer).decode())
-                    entries = man.get("entries", {})
-                    present = sorted(
-                        {int(k.split("/")[0]) for k in entries})
-                    row.update({
-                        "generation": man.get("generation"),
-                        "readable": True,
-                        "entries": len(entries),
-                        "slab_shift": man.get("slab_shift"),
-                        "committed_at": man.get("committed_at"),
-                        "mips": present,
-                        "empty_mips": sorted(registered - set(present)),
-                    })
-                except Exception:
-                    pass
-                out.append(row)
         return out
 
     def fsck(self, repair: bool = False,
@@ -2263,8 +2141,7 @@ class Volume:
         man = self._read_manifest()
         if man is None:
             report["ok"] = True
-            report["note"] = ("no manifest: empty table or legacy "
-                              "layout (fsck covers manifest tables)")
+            report["note"] = "no manifest: empty table"
             return report
         report["generation"] = int(man.get("generation", 0))
         gens = self._manifest_generations()
@@ -2393,10 +2270,6 @@ class Volume:
             keep = set(gens[:max(keep_manifests, 1)])
             resolved = int(man.get("generation", 0))
             keep.add(resolved)
-            # seed from the RESOLVED manifest's own entries — on an
-            # interim single-pointer table there are no numbered files
-            # to re-read, and an empty live set here would reclaim
-            # every dir the table references
             live = {rel.split("/")[1] for rel in man["entries"].values()}
             for g in sorted(keep, reverse=True):
                 if g == resolved:
@@ -2455,53 +2328,6 @@ class Volume:
                         fs.remove(f"{feed_dir}/{n2}")
             return plan if dry_run else n
 
-    def _overwrite_slabs_legacy(self, out: DataFrame,
-                                drop: Optional[Iterable[tuple]],
-                                replace_mips: Optional[Iterable[int]] = None,
-                                ) -> None:
-        """Pre-manifest commit: stage then rename-swap hive slab dirs
-        in place. Kept verbatim for tables written before the manifest;
-        lock already held by the caller. ``replace_mips`` removes every
-        slab dir of those mips the staged output did not rewrite — the
-        same full-mip-rebuild contract the manifest path honors (stale
-        downsample/remap targets must not keep serving)."""
-        fs = self._fs
-        tmp = f"{self.chunks_path}.tmp-commit-{uuid.uuid4().hex[:12]}"
-        staged: dict = {}  # "mip=M" -> {"slab=S", ...}
-        try:
-            (
-                out.repartition(F.col("mip"), self._commit_bucket())
-                .sortWithinPartitions("slab", "morton")
-                .write.mode("overwrite")
-                .option("compression", "none")  # blobs carry their own gzip
-                .partitionBy("mip", "slab")
-                .parquet(tmp)
-            )
-            for mip_dir in fs.listdir(tmp):
-                if not mip_dir.startswith("mip="):
-                    continue
-                for slab_dir in fs.listdir(f"{tmp}/{mip_dir}"):
-                    if not slab_dir.startswith("slab="):
-                        continue
-                    staged.setdefault(mip_dir, set()).add(slab_dir)
-                    dest = f"{self.chunks_path}/{mip_dir}/{slab_dir}"
-                    if fs.exists(dest):
-                        fs.rmtree(dest)
-                    fs.makedirs(f"{self.chunks_path}/{mip_dir}")
-                    fs.rename(f"{tmp}/{mip_dir}/{slab_dir}", dest)
-        finally:
-            fs.rmtree(tmp)
-        for m in (replace_mips or ()):
-            mip_dir = f"mip={int(m)}"
-            keep = staged.get(mip_dir, set())
-            for slab_dir in fs.listdir(f"{self.chunks_path}/{mip_dir}"):
-                if slab_dir.startswith("slab=") and slab_dir not in keep:
-                    fs.rmtree(f"{self.chunks_path}/{mip_dir}/{slab_dir}")
-        for (mip, slab) in (drop or ()):
-            path = f"{self.chunks_path}/mip={mip}/slab={slab}"
-            if fs.exists(path):
-                fs.rmtree(path)
-
     def _check_writable(self) -> None:
         """Raise unless this handle may mutate the table — guards every
         commit entry point (enforced at lock acquisition) plus the
@@ -2535,12 +2361,7 @@ class Volume:
         for direct callers. The depth is thread-local: a second driver
         thread sharing this Volume contends on the lock file like any
         external writer (an instance-wide counter would let it ride
-        the first thread's lock and race the stage-and-swap).
-
-        On each outermost acquisition, staging dirs orphaned by
-        CRASHED commits (``<chunks>.tmp-*`` — a kill mid-write skips
-        the owner's finally-cleanup) are swept: holding the lock
-        proves no live writer is staging, so any leftover is dead."""
+        the first thread's lock and race the stage-and-swap)."""
         from contextlib import contextmanager
 
         fs = self._fs
@@ -2565,33 +2386,12 @@ class Volume:
                 )
             self._lock_tls.depth = 1
             try:
-                self._sweep_stale_staging()
                 yield
             finally:
                 self._lock_tls.depth = 0
                 fs.remove(lock)
 
         return held()
-
-    def _sweep_stale_staging(self) -> None:
-        """Remove legacy ``<chunks>.tmp-*`` staging dirs left by
-        crashed commits. Only called while HOLDING the commit lock —
-        live staging always belongs to the lock holder, so anything
-        found here is an orphan. (Unreferenced ``data/commit-*`` dirs
-        and superseded manifest generations are a snapshot-retention
-        question, reclaimed by :meth:`vacuum`, not here; a crashed
-        publisher's manifest husk is reclaimed at the next publish.)"""
-        fs = self._fs
-        parent, base = os.path.split(self.chunks_path.rstrip("/"))
-        prefix = base + ".tmp-"
-        try:
-            names = fs.listdir(parent)
-        except (OSError, ValueError):
-            return
-        for n in names:
-            if n.startswith(prefix):
-                fs.rmtree(f"{parent}/{n}")
-
 
     def write_blocks_df(self, blocks: DataFrame, mip: int = 0,
                         compression: Optional[str] = "gzip",
@@ -3570,11 +3370,6 @@ class Volume:
                             entries,
                             expect_generation=int(man0["generation"]),
                             old_entries=dict(man0["entries"]))
-                    else:
-                        for s in slabs:
-                            path = f"{self.chunks_path}/mip={mip}/slab={s}"
-                            if self._fs.exists(path):
-                                self._fs.rmtree(path)
             finally:
                 survivors.unpersist()
 
@@ -3585,37 +3380,6 @@ class Volume:
         with self._commit_lock():
             if self._fs.exists(self.chunks_path):
                 self._fs.rmtree(self.chunks_path)
-
-    def migrate_to_manifest(self) -> int:
-        """One-commit rewrite of a legacy hive table (``mip=``/``slab=``
-        dirs) into the snapshot-manifest layout; returns the entry
-        count (0 when the table is already manifest-managed or empty).
-        The legacy dirs are removed after the first generation
-        publishes — a crash in between leaves BOTH layouts, and the
-        manifest wins on the next open (reads stay correct; the stale
-        hive dirs are dead weight to clean by hand)."""
-        fs = self._fs
-        self._lru_clear()
-        with self._commit_lock():
-            if not self._is_legacy_layout():
-                return 0
-            # re-derive slab at THIS table's target shift: legacy rows
-            # carry morton>>6 values, and the published manifest must
-            # agree with the row/dir keys (migration is exactly when a
-            # user adopts a bigger slab for the manifest-size knob)
-            src = self.chunks_df(manifest=None).withColumn(
-                "slab",
-                F.shiftrightunsigned(F.col("morton"),
-                                     int(self.slab_shift)).cast("int"),
-            )
-            commit_id = f"commit-{uuid.uuid4().hex[:12]}"
-            staged = self._stage_commit(src, commit_id)
-            self._publish_manifest(staged, expect_generation=0,
-                                   old_entries={})
-            for n in fs.listdir(self.chunks_path):
-                if n.startswith("mip="):
-                    fs.rmtree(f"{self.chunks_path}/{n}")
-            return len(staged)
 
     # ------------------------------------------------------------------
     # label rewrites (reference chunks.remap / frontends mask)
@@ -3660,8 +3424,7 @@ class Volume:
                 yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
 
         # full-mip rewrite committed as a snapshot generation that
-        # REPLACES every previous entry of this mip (legacy tables take
-        # the dir swap inside _overwrite_slabs_legacy); lock held
+        # REPLACES every previous entry of this mip; lock held
         # across the read snapshot AND the publish (see _commit_lock);
         # clear the point-read LRU or it would serve stale pre-remap
         # labels afterwards
@@ -3671,12 +3434,8 @@ class Volume:
             man0 = self._read_manifest()
             src = self.chunks_df(mip=int(mip), manifest=man0)
             out = src.mapInPandas(rewrite, schema=CHUNK_SCHEMA)
-            # ONE commit path: _overwrite_slabs routes legacy tables
-            # through the per-slab swap internally. The hand-rolled
-            # whole-mip rmtree-then-rename this replaced had a
-            # data-loss window: after rmtree(mip_dir), a rename failure
-            # hit the finally-rmtree(tmp) and destroyed the ONLY
-            # surviving copy of the mip.
+            # ONE commit path: never an in-place rmtree-then-rename of
+            # the mip, whose failed rename would destroy its only copy
             self._overwrite_slabs(out, replace_mips=[int(mip)],
                                   snapshot=man0)
 
@@ -3710,7 +3469,7 @@ class Volume:
         loudly to a full recompute when the affected-parent count
         exceeds the documented cap (the change covers most of the
         table) and raises if generation ``N`` fell out of vacuum
-        retention or the table predates the manifest log."""
+        retention."""
         # the WHOLE operation — since_generation validation, scale
         # registration, reduce, publish — runs under one lock hold
         # (re-entrant for the inner commit): validating outside it
@@ -3726,12 +3485,6 @@ class Volume:
                          since_generation):
         old_man = None
         if since_generation is not None:
-            if self._is_legacy_layout():
-                raise ManifestError(
-                    "incremental downsample requires the snapshot-"
-                    "manifest layout (the change feed lives in the "
-                    "manifest log) — run migrate_to_manifest() first"
-                )
             old_man = self._generation_or_raise(since_generation)
         info = self.info
         factor = np.asarray(factor, dtype=np.int64)

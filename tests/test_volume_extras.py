@@ -305,26 +305,6 @@ def test_commit_lock_not_shared_across_threads(spark, tmp_path):
         vol.cutout(Bbox((0, 0, 0), (32, 32, 32))), patch)
 
 
-def test_stale_staging_swept_on_next_commit(spark, tmp_path):
-    """Staging dirs orphaned by a crashed commit (finally-cleanup
-    skipped by a hard kill) are removed on the next lock acquisition —
-    holding the lock proves nothing live is staging."""
-    import numpy as np
-
-    import os
-
-    arr = np.arange(32 * 32 * 32, dtype=np.uint32).reshape(32, 32, 32, 1)
-    vol = Volume.from_numpy(
-        spark, arr, str(tmp_path / "swv"), chunk_size=(32, 32, 32))
-    orphan = vol.chunks_path + ".tmp-commit-deadbeef0000"
-    os.makedirs(os.path.join(orphan, "mip=0"), exist_ok=True)
-    with open(os.path.join(orphan, "mip=0", "junk"), "w") as f:
-        f.write("x")
-    vol.upload(np.zeros((32, 32, 32, 1), np.uint32), offset=(0, 0, 0))
-    assert not os.path.exists(orphan)
-    # the lock file itself is never swept
-    assert not os.path.exists(vol._commit_lock_path)
-
 # ---------------------------------------------------------------------------
 # snapshot-manifest commit protocol (r7)
 # ---------------------------------------------------------------------------
@@ -446,45 +426,6 @@ def test_time_travel_open_reads_old_generation(spark, tmp_path):
         Volume.open(spark, str(tmp_path / "tt"), generation=gen0)
 
 
-def test_legacy_layout_still_reads_and_commits(spark, tmp_path):
-    """Tables written before the manifest (hive mip=/slab= dirs, no
-    _manifest.json) read, write, remap, and delete through the legacy
-    path unchanged."""
-    import os as _os
-
-    import numpy as np
-
-    arr, vol = _mk_vol(spark, tmp_path, "leg")
-    # convert to the legacy layout: rewrite all rows through the legacy
-    # committer, drop the manifest + data dirs
-    rows = vol.chunks_df()
-    legacy_rows = rows.collect()
-    import shutil as _shutil
-
-    base = str(tmp_path / "leg2")
-    vol2 = Volume.create(spark, base, vol.info)
-    df = spark.createDataFrame(legacy_rows, schema=rows.schema)
-    with vol2._commit_lock():
-        vol2._overwrite_slabs_legacy(df, None)
-    assert vol2._is_legacy_layout()
-    assert _os.path.isdir(_os.path.join(base, "chunks", "mip=0"))
-
-    # reads
-    out = vol2.cutout(Bbox((0, 0, 0), (64, 64, 64)))
-    assert np.array_equal(out, arr)
-    assert vol2.has_data(0) and not vol2.has_data(1)
-    # point read exercises the pyarrow hive fast path
-    assert int(vol2.read_voxel((3, 5, 7))[0]) == int(arr[3, 5, 7, 0])
-    # legacy commit path: non-manifest upload + readback
-    vol2.upload(np.zeros((32, 32, 32, 1), np.uint32), offset=(0, 0, 0))
-    assert vol2._is_legacy_layout()  # stays legacy
-    out = vol2.cutout(Bbox((0, 0, 0), (32, 32, 32)))
-    assert (out == 0).all()
-    # legacy remap full-mip swap
-    vol2.apply_remap({0: 9})
-    out = vol2.cutout(Bbox((0, 0, 0), (32, 32, 32)))
-    assert (out == 9).all()
-
 def test_manifest_torn_publish_falls_back_one_generation(spark, tmp_path):
     """A torn/corrupt NEWEST manifest file means that commit never
     happened: readers serve the previous generation; once every
@@ -561,6 +502,51 @@ def test_crashed_first_commit_reads_as_empty(spark, tmp_path):
     assert not _os.path.isdir(
         _os.path.join(vol.chunks_path, "data", "commit-dead"))
 
+
+@pytest.mark.parametrize("layout", ["hive", "pointer"])
+def test_pre_manifest_layout_refused(spark, tmp_path, layout):
+    """A table in a pre-manifest layout (hive ``mip=``/``slab=`` dirs,
+    or the single ``chunks/_manifest.json`` pointer) with no numbered
+    manifest is refused with one ManifestError on open, read and
+    commit, never served as an empty table, and nothing is written."""
+    import json
+    import os
+    import shutil
+
+    from cloud_volume_spark.volume import ManifestError
+
+    _, vol = _mk_vol(spark, tmp_path, "old", n=32, cs=16)
+    chunks = vol.chunks_path
+    man = vol._read_manifest()
+    if layout == "hive":
+        for k, rel in man["entries"].items():
+            m, s = k.split("/")
+            shutil.copytree(f"{chunks}/{rel}", f"{chunks}/mip={m}/slab={s}")
+        shutil.rmtree(f"{chunks}/data")
+        match = "hive partition"
+    else:
+        with open(f"{chunks}/_manifest.json", "w") as f:
+            json.dump(man, f)
+        match = "single-pointer manifest"
+    for g in vol._manifest_generations():
+        os.remove(vol._manifest_file(g))
+    shutil.rmtree(f"{chunks}/feed", ignore_errors=True)
+    before = sorted(os.listdir(chunks))
+
+    base = str(tmp_path / "old")
+    with pytest.raises(ManifestError, match=match) as opened:
+        Volume.open(spark, base)
+    assert "no longer supported" in str(opened.value)
+    handle = Volume(spark, base, vol.info)
+    with pytest.raises(ManifestError) as read:
+        handle.cutout(Bbox((0, 0, 0), (32, 32, 32)))
+    with pytest.raises(ManifestError) as wrote:
+        handle.upload(np.zeros((16, 16, 16, 1), np.uint32), offset=(0, 0, 0))
+    assert str(read.value) == str(wrote.value) == str(opened.value)
+    assert sorted(os.listdir(chunks)) == before
+    assert not os.path.exists(handle._commit_lock_path)
+
+
 def test_concurrent_writers_stress_all_commits_survive(spark, tmp_path):
     """Four threads upload disjoint regions concurrently, retrying on
     CommitConflictError: every successful commit's data must be present
@@ -607,46 +593,6 @@ def test_concurrent_writers_stress_all_commits_survive(spark, tmp_path):
     # z=32.. slabs never written stay zero
     assert (out[:, :, 32:] == 0).all()
 
-def test_migrate_legacy_to_manifest(spark, tmp_path):
-    """migrate_to_manifest rewrites a hive table into the snapshot
-    layout in one commit; a migration that crashed between staging and
-    publish leaves the hive dirs authoritative (no silent emptiness)."""
-    import os as _os
-
-    import numpy as np
-
-    arr, vol = _mk_vol(spark, tmp_path, "mig")
-    # build the legacy twin
-    rows = vol.chunks_df().collect()
-    base = str(tmp_path / "mig2")
-    vol2 = Volume.create(spark, base, vol.info)
-    df = spark.createDataFrame(rows, schema=vol.chunks_df().schema)
-    with vol2._commit_lock():
-        vol2._overwrite_slabs_legacy(df, None)
-    assert vol2._is_legacy_layout()
-
-    # simulate a crashed migration: staged data/, no manifest yet —
-    # the hive dirs must stay the committed truth
-    _os.makedirs(_os.path.join(vol2.chunks_path, "data", "commit-x",
-                               "pm=0", "ps=0"))
-    assert vol2._is_legacy_layout()
-    assert np.array_equal(
-        vol2.cutout(Bbox((0, 0, 0), (64, 64, 64))), arr)
-
-    # real migration
-    n = vol2.migrate_to_manifest()
-    assert n >= 1
-    assert not vol2._is_legacy_layout()
-    assert vol2._read_manifest() is not None
-    assert not any(
-        d.startswith("mip=") for d in _os.listdir(vol2.chunks_path))
-    assert np.array_equal(
-        vol2.cutout(Bbox((0, 0, 0), (64, 64, 64))), arr)
-    # second call is a no-op; vacuum clears the crashed staging orphan
-    assert vol2.migrate_to_manifest() == 0
-    vol2.vacuum()
-    assert not _os.path.isdir(
-        _os.path.join(vol2.chunks_path, "data", "commit-x"))
 
 def test_custom_slab_shift_roundtrip(spark, tmp_path):
     """A table created with a non-default slab_shift (the 100 TB knob:
@@ -704,28 +650,6 @@ def test_slab_shift_mismatch_commit_guard(spark, tmp_path):
         a.upload(np.zeros((32, 32, 32, 1), np.uint8), offset=(32, 32, 32))
 
 
-def test_migration_adopts_target_slab_shift(spark, tmp_path):
-    """Migration re-derives slab at the target shift — adopting the
-    manifest-size knob at migration time is the expected workflow."""
-    import numpy as np
-
-    arr, vol = _mk_vol(spark, tmp_path, "migshift")
-    rows = vol.chunks_df().collect()
-    base = str(tmp_path / "migshift2")
-    v2 = Volume.create(spark, base, vol.info, slab_shift=1)
-    df = spark.createDataFrame(rows, schema=vol.chunks_df().schema)
-    with v2._commit_lock():
-        v2._overwrite_slabs_legacy(df, None)
-    n = v2.migrate_to_manifest()
-    man = v2._read_manifest()
-    assert int(man["slab_shift"]) == 1
-    # 8 chunks, 2 per slab at shift 1 -> 4 entries, keys match rows
-    assert len(man["entries"]) == 4
-    out = v2.cutout(Bbox((0, 0, 0), (64, 64, 64)))
-    assert np.array_equal(out, arr)
-    assert int(v2.read_voxel((40, 3, 9))[0]) == int(arr[40, 3, 9, 0])
-
-
 def test_history_lists_generations_and_husks(spark, tmp_path):
     """history() = DESCRIBE HISTORY: every retained generation newest
     first with entry counts, torn husks flagged unreadable."""
@@ -775,33 +699,6 @@ def test_history_flags_registered_but_empty_mips(spark, tmp_path):
     assert head["empty_mips"] == [1]
 
 
-def test_vacuum_interim_pointer_table_keeps_live_dirs(spark, tmp_path):
-    """Regression: on an interim single-pointer table (chunks/
-    _manifest.json, no numbered generations) vacuum must seed the
-    live-dir set from the resolved manifest's own entries — an empty
-    set here would reclaim every referenced data dir (data loss)."""
-    import json as _json
-    import os as _os
-
-    arr, vol = _mk_vol(spark, tmp_path, "ptr")
-    man = vol._read_manifest()
-    # demote the numbered log to the interim single-pointer format
-    for g in vol._manifest_generations():
-        vol._fs.remove(vol._manifest_file(g))
-    vol._fs.write_bytes(
-        f"{vol.chunks_path}/_manifest.json",
-        _json.dumps({"version": 1, "generation": man["generation"],
-                     "slab_shift": man.get("slab_shift"),
-                     "entries": man["entries"]}).encode())
-    vol2 = Volume.open(spark, str(tmp_path / "ptr"))
-    assert vol2._read_manifest() is not None
-    assert vol2.vacuum() == 0  # every dir is referenced → none removed
-    live = {rel.split("/")[1] for rel in man["entries"].values()}
-    data_dir = _os.path.join(vol2.chunks_path, "data")
-    assert live <= set(_os.listdir(data_dir))
-    assert np.array_equal(
-        vol2.cutout(Bbox((0, 0, 0), (64, 64, 64))), arr)
-
 def test_sibling_layers_honor_read_only_and_pin(spark, tmp_path):
     """vol.mesh / vol.skeleton inherit the owning handle's writability:
     a time-travel-pinned or redirect-read-only volume's sibling layers
@@ -841,28 +738,6 @@ def test_sibling_layers_honor_read_only_and_pin(spark, tmp_path):
     vol.skeleton.write(skel_df)
     assert vol.mesh.df().count() == 1
     assert vol.skeleton.df().count() == 1
-
-
-def test_history_reports_interim_pointer_generation(spark, tmp_path):
-    """history() on an interim single-pointer table must surface the
-    live generation _read_manifest serves, not claim 'no commits'."""
-    import json as _json
-
-    _, vol = _mk_vol(spark, tmp_path, "hptr")
-    man = vol._read_manifest()
-    for g in vol._manifest_generations():
-        vol._fs.remove(vol._manifest_file(g))
-    vol._fs.write_bytes(
-        f"{vol.chunks_path}/_manifest.json",
-        _json.dumps({"version": 1, "generation": man["generation"],
-                     "slab_shift": man.get("slab_shift"),
-                     "entries": man["entries"]}).encode())
-    h = Volume.open(spark, str(tmp_path / "hptr")).history()
-    assert len(h) == 1
-    assert h[0]["interim_pointer"] is True
-    assert h[0]["readable"] is True
-    assert h[0]["generation"] == man["generation"]
-    assert h[0]["entries"] == len(man["entries"])
 
 
 def test_pinned_manifest_is_cached(spark, tmp_path):
@@ -968,7 +843,7 @@ def test_incremental_downsample_matches_full(spark, tmp_path):
 
 def test_incremental_downsample_noop_and_guards(spark, tmp_path):
     """since_generation at the current generation is a no-op commit;
-    a vacuumed base raises; a legacy table demands migration."""
+    a vacuumed base raises."""
     import pytest as _pytest
 
     from cloud_volume_spark.volume import ManifestError
@@ -1038,43 +913,15 @@ def test_full_downsample_drops_emptied_target_slabs(spark, tmp_path):
                    for k in vol._read_manifest()["entries"])
 
 
-def test_changes_argument_and_legacy_guards(spark, tmp_path):
-    """Inverted generation order raises; a pre-manifest table demands
-    migration instead of silently reporting an empty feed."""
+def test_changes_rejects_inverted_range(spark, tmp_path):
+    """Inverted generation order raises instead of labelling
+    additions as removals."""
     import pytest as _pytest
-
-    from cloud_volume_spark.volume import ManifestError
 
     _, vol = _mk_vol(spark, tmp_path, "chg", n=32, cs=16)
     with _pytest.raises(ValueError, match="inverted|must not exceed"):
         vol.changes(5, 2)
 
-    # demote to the legacy hive layout: changes() must refuse
-    import shutil as _sh
-    man = vol._read_manifest()
-    for k, rel in man["entries"].items():
-        m, s = k.split("/")
-        dst = f"{vol.chunks_path}/mip={m}/slab={s}"
-        _os_makedirs(dst)
-        src_dir = f"{vol.chunks_path}/{rel}"
-        for f in _os_listdir(src_dir):
-            _sh.copy(f"{src_dir}/{f}", f"{dst}/{f}")
-    for g in vol._manifest_generations():
-        vol._fs.remove(vol._manifest_file(g))
-    _sh.rmtree(f"{vol.chunks_path}/data")
-    legacy = Volume.open(spark, str(tmp_path / "chg"))
-    with _pytest.raises(ManifestError, match="migrate_to_manifest"):
-        legacy.changes(0)
-
-
-def _os_makedirs(p):
-    import os
-    os.makedirs(p, exist_ok=True)
-
-
-def _os_listdir(p):
-    import os
-    return os.listdir(p)
 
 def test_open_as_of_timestamp(spark, tmp_path):
     """open(as_of=ts) pins the newest generation published at or
@@ -1112,31 +959,6 @@ def test_open_as_of_timestamp(spark, tmp_path):
                       as_of="2100-01-01T00:00:00+00:00")
     assert iso._pinned_generation == h[0]["generation"]
 
-def test_full_downsample_rebuild_contract_on_legacy_table(spark, tmp_path):
-    """The full-rebuild contract (emptied target slabs disappear) holds
-    on pre-manifest hive tables too — replace_mips reaches the legacy
-    committer instead of being silently dropped."""
-    import os as _os
-
-    arr, vol = _mk_vol(spark, tmp_path, "legd", n=32, cs=8)
-    rows = vol.chunks_df()
-    df = spark.createDataFrame(rows.collect(), schema=rows.schema)
-    base = str(tmp_path / "legd2")
-    vol2 = Volume.create(spark, base, vol.info.clone())
-    with vol2._commit_lock():
-        vol2._overwrite_slabs_legacy(df, None)
-    assert vol2._is_legacy_layout()
-
-    vol2.downsample()
-    assert vol2.has_data(1)
-    vol2.delete(Bbox((0, 0, 0), (32, 32, 32)))
-    vol2.downsample()
-    mip1 = _os.path.join(base, "chunks", "mip=1")
-    slabs = [d for d in (_os.listdir(mip1) if _os.path.isdir(mip1) else [])
-             if d.startswith("slab=")]
-    assert slabs == []
-    assert not vol2.has_data(1)
-
 
 def test_as_of_husk_skipped_but_read_failure_loud(spark, tmp_path):
     """as_of resolution skips a torn husk (that commit never happened)
@@ -1172,26 +994,6 @@ def test_as_of_husk_skipped_but_read_failure_loud(spark, tmp_path):
         vol._generation_as_of(_time.time())
     vol._fs = real
 
-
-def test_as_of_resolves_interim_pointer_table(spark, tmp_path):
-    """open(as_of=...) on an interim single-pointer table serves the
-    pointer (an unstamped manifest counts as arbitrarily old)."""
-    import json as _json
-    import time as _time
-
-    arr, vol = _mk_vol(spark, tmp_path, "asofp")
-    man = vol._read_manifest()
-    for g in vol._manifest_generations():
-        vol._fs.remove(vol._manifest_file(g))
-    vol._fs.write_bytes(
-        f"{vol.chunks_path}/_manifest.json",
-        _json.dumps({"version": 1, "generation": man["generation"],
-                     "slab_shift": man.get("slab_shift"),
-                     "entries": man["entries"]}).encode())
-    pinned = Volume.open(spark, str(tmp_path / "asofp"),
-                         as_of=_time.time())
-    assert np.array_equal(
-        pinned.cutout(Bbox((0, 0, 0), (64, 64, 64))), arr)
 
 def _feed_rows_on_disk(vol):
     """{generation: [row dicts]} parsed straight from the feed files."""
@@ -2268,40 +2070,6 @@ def test_fsck_repair_transient_manifest_read_is_not_destructive(
     r = vol.fsck()
     assert r["ok"] and not r["manifest_read_errors"]
     assert (vol.cutout(Bbox((0, 0, 0), (8, 8, 8))) == 0).all()
-
-
-def test_open_generation_zero_legacy_table_raises(spark, tmp_path):
-    """open(generation=0) on a legacy hive-layout table raises instead
-    of serving the (full) table as an empty generation-0 snapshot —
-    the same layout guard restore()/compact() apply."""
-    import os as _os
-    import shutil as _shutil
-
-    from cloud_volume_spark.volume import ManifestError
-
-    arr, vol = _mk_vol(spark, tmp_path, "genzl")
-    # demote to the legacy layout: hive mip dir, no manifest log
-    chunks = vol.chunks_path
-    man_files = [n for n in _os.listdir(chunks)
-                 if n.startswith("_manifest")]
-    legacy = vol._read_manifest()
-    src_dirs = {rel for rel in legacy["entries"].values()}
-    _os.makedirs(_os.path.join(chunks, "mip=0"), exist_ok=True)
-    for rel in src_dirs:
-        d = _os.path.join(chunks, rel)
-        for n in _os.listdir(d):
-            if n.endswith(".parquet"):
-                _shutil.copy(_os.path.join(d, n),
-                             _os.path.join(chunks, "mip=0", n))
-    for n in man_files:
-        _os.remove(_os.path.join(chunks, n))
-    _shutil.rmtree(_os.path.join(chunks, "data"))
-    _shutil.rmtree(_os.path.join(chunks, "feed"), ignore_errors=True)
-
-    fresh = Volume.open(spark, str(tmp_path / "genzl"))
-    assert fresh._is_legacy_layout()
-    with pytest.raises(ManifestError, match="legacy"):
-        Volume.open(spark, str(tmp_path / "genzl"), generation=0)
 
 
 def test_vacuum_dry_run_plans_without_deleting(spark, tmp_path):

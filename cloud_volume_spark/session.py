@@ -77,6 +77,12 @@ def get_spark(
         # converted back to timestamp in operators.common.load
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # an ORDER BY ... LIMIT k under this threshold runs as an
+        # in-memory top-k whose per-task buffer is preallocated at 2k
+        # slots: a caller's "unbounded" k=10**9 asks for 2e9 references
+        # (16 GB) per task. Above it the plan is a spilling sort + limit.
+        # Every operator's own top-k (k <= a few hundred) stays in memory
+        .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
         .config("spark.driver.maxResultSize", "4g")
         # dump a native traceback if a Python worker dies ("Python
         # worker exited unexpectedly" is undebuggable without it).

@@ -12,7 +12,8 @@ Layout & scale design:
   (64 spatially-adjacent chunks per slab, Z-order clustered). Bbox
   reads prune on slab ranges via min/max parquet stats + the
   ``cx/cy/cz BETWEEN`` predicates Catalyst pushes to the scan; writes
-  rewrite only the touched slabs (dynamic partition overwrite) — the
+  rewrite only the touched slabs (driver-staged for uploads, one Spark
+  write for distributed writers) — the
   copy-on-write unit is bounded, unlike a whole-table rewrite, so the
   design survives 100 TB volumes. A production deployment would swap
   the slab-overwrite for a table format's row-level MERGE; semantics
@@ -1063,70 +1064,97 @@ class Volume:
         bbox: Bbox,
         extra_deletes: Optional[set] = None,
     ) -> None:
-        """Merge new chunk rows into the table, rewriting only touched
-        ``(mip, slab)`` partitions (dynamic partition overwrite)."""
-        new_df = self.spark.createDataFrame(rows, schema=CHUNK_SCHEMA)
-        write_slabs = {r[1] for r in rows}
-        replaced = {(r[2], r[3], r[4]) for r in rows}
-        # slabs holding delete-only keys must be scanned too, or an
-        # all-black rewrite leaves the stale chunk in place
-        delete_slabs: set = set()
+        """Merge new chunk rows into the table, rewriting only the
+        touched ``(mip, slab)`` dirs. The rows are already encoded here
+        on the driver, so the merge stays here too (:meth:`_stage_rows`):
+        an upload runs no Spark job. Only the distributed writers
+        (:meth:`_overwrite_slabs`) shuffle on the morton sub-bucket.
+        ``extra_deletes`` are grid keys to remove without a replacement
+        row (``delete_black_uploads``)."""
+        replaced = {int(r[5]) for r in rows}
         if extra_deletes:
-            replaced |= set(extra_deletes)
             grid = [int(g) for g in self.info.grid_shape(mip)]
-            delete_slabs = {
-                _slab_of(int(compressed_morton_code(c, grid)),
-                         self.slab_shift)
-                for c in extra_deletes
-            }
-        touched_slabs = sorted(write_slabs | delete_slabs)
+            replaced |= {int(compressed_morton_code(c, grid))
+                         for c in extra_deletes}
+        self._commit_generation(
+            lambda man, commit_id: self._stage_rows(
+                rows, int(mip), replaced, man, commit_id))
 
-        # lock BEFORE the read snapshot: the survivors listing must see
-        # every previously-committed slab swap, or a concurrent
-        # read-modify-write silently drops the other writer's chunks
-        with self._commit_lock():
-            if self._fs.exists(self.chunks_path):
-                # resolve the snapshot ONCE: the survivors read and the
-                # publish CAS must share a generation, or a stale
-                # snapshot could publish over an interloper's commit
-                man0 = self._read_manifest()
-                existing = self.chunks_df(mip=int(mip), slabs=touched_slabs,
-                                          manifest=man0)
-                # drop rows being replaced (or deleted) — key anti-join
-                keys = self.spark.createDataFrame(
-                    [(int(mip), int(cx), int(cy), int(cz)) for (cx, cy, cz) in replaced],
-                    schema="mip int, cx int, cy int, cz int",
-                )
-                survivors = existing.join(
-                    F.broadcast(keys), on=["mip", "cx", "cy", "cz"], how="left_anti"
-                )
-                out = survivors.unionByName(new_df)
-                drop: list = []
-                cached = bool(delete_slabs - write_slabs)
-                try:
-                    if cached:
-                        # delete-only slabs with no survivors produce no
-                        # output partition — remove their dirs explicitly
-                        out = out.cache()
-                        live = {
-                            r.slab for r in out.select("slab").distinct().collect()
-                        }
-                        drop = [(mip, s) for s in (delete_slabs - write_slabs) - live]
-                    self._overwrite_slabs(out, drop=drop, snapshot=man0)
-                finally:
-                    if cached:
-                        out.unpersist()
-            else:
-                self._overwrite_slabs(new_df)
+    def _stage_rows(self, rows: list, mip: int, replaced: set,
+                    man: Optional[dict], commit_id: str) -> dict:
+        """Driver stager behind :meth:`_commit_rows`. For each touched
+        slab: read the snapshot's files with pyarrow through
+        :class:`PathOps` (local paths and ``scheme://`` URIs alike),
+        drop the ``replaced`` mortons (morton is the key within one
+        mip), add ``rows``, sort by morton and write one uncompressed
+        parquet file per ``morton >> _commit_bucket()`` group under
+        ``chunks/data/<commit_id>/pm=M/ps=S`` — the layout
+        :meth:`_stage_commit` writes. Each file is synced before the
+        manifest that references it publishes. Holds one slab at a time
+        (at most ``2**slab_shift`` encoded chunks). Returns manifest
+        entries; a slab left with no rows maps to None (entry dropped)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    def _commit_bucket(self):
-        """Shuffle key for commit writes: ``morton >> k`` where ``k``
-        groups ~16 MB of chunk data per output file. Z-order stays
-        intact (each file covers a contiguous morton range inside its
-        slab dir) while small volumes still fan out across writers —
-        ``repartition("slab")`` alone collapses a one-slab write to a
-        single task. Hash-based, so no sampling pass over the (possibly
-        expensive-to-recompute) encode stage, unlike repartitionByRange."""
+        fs = self._fs
+        schema = to_arrow_schema(CHUNK_SCHEMA)
+        shift = self._commit_bucket()
+        gone = pa.array(sorted(replaced), pa.int64())
+        new_by_slab: dict = {}
+        for r in rows:
+            new_by_slab.setdefault(int(r[1]), []).append(r)
+        slabs = set(new_by_slab) | {_slab_of(m, self.slab_shift)
+                                    for m in replaced}
+        entries = man["entries"] if man else {}
+        staged = {}
+        for s in sorted(slabs):
+            key = f"{mip}/{s}"
+            parts = []
+            if key in entries:
+                d = f"{self.chunks_path}/{entries[key]}"
+                for n in sorted(fs.listdir(d)):
+                    if not n.endswith(".parquet"):
+                        continue
+                    t = pq.read_table(pa.BufferReader(
+                        fs.read_bytes(f"{d}/{n}"))).select(
+                            schema.names).cast(schema)
+                    parts.append(t.filter(pc.invert(
+                        pc.is_in(t["morton"], value_set=gone))))
+            if s in new_by_slab:
+                cols = zip(*new_by_slab[s])
+                parts.append(pa.Table.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                    schema=schema))
+            tbl = pa.concat_tables(parts or [schema.empty_table()])
+            if not tbl.num_rows:
+                staged[key] = None
+                continue
+            tbl = tbl.sort_by("morton")
+            rel = f"data/{commit_id}/pm={mip}/ps={s}"
+            buckets = tbl["morton"].to_numpy() >> shift
+            starts = np.flatnonzero(np.r_[True, buckets[1:] != buckets[:-1]])
+            for lo, hi in zip(starts, np.r_[starts[1:], len(buckets)]):
+                buf = pa.BufferOutputStream()
+                pq.write_table(tbl.slice(lo, hi - lo), buf,
+                               compression="none", use_dictionary=False)
+                fs.write_bytes(
+                    f"{self.chunks_path}/{rel}/part-{int(buckets[lo]):05d}.parquet",
+                    buf.getvalue().to_pybytes(), sync=True)
+            staged[key] = rel
+        return staged
+
+    def _commit_bucket(self) -> int:
+        """The in-slab file split shared by both stagers: one output
+        file per ``morton >> k``, where ``k`` groups ~16 MB of chunk
+        data. Z-order stays intact (each file covers a contiguous
+        morton range inside its slab dir). For :meth:`_stage_commit` it
+        is also the shuffle key, so small volumes still fan out across
+        writers — ``repartition("slab")`` alone collapses a one-slab
+        write to a single task. Hash-based, so no sampling pass over
+        the (possibly expensive-to-recompute) encode stage, unlike
+        repartitionByRange."""
         info = self.info
         chunk_bytes = int(
             np.prod(info.chunk_size(0))
@@ -1135,26 +1163,43 @@ class Volume:
         while bucket_chunks < (1 << self.slab_shift) and \
                 bucket_chunks * max(chunk_bytes, 1) < (16 << 20):
             bucket_chunks *= 2
-        shift = bucket_chunks.bit_length() - 1
-        return F.shiftrightunsigned(F.col("morton"), shift)
+        return bucket_chunks.bit_length() - 1
 
     def _overwrite_slabs(self, out: DataFrame, drop: Optional[Iterable[tuple]] = None,
                          replace_mips: Optional[Iterable[int]] = None,
                          snapshot=_UNRESOLVED) -> None:
-        """Snapshot commit: write the touched ``(mip, slab)`` datasets
-        as IMMUTABLE dirs under ``chunks/data/<commit-id>``, then
-        publish the next numbered manifest generation. The rewrite unit
-        is the slab, never the table; readers holding a previous
-        manifest keep a consistent snapshot (their dirs are never
-        touched — old generations are reclaimed by :meth:`vacuum`).
-        ``drop`` lists (mip, slab) partitions whose every row was
-        deleted; ``replace_mips`` drops EVERY previous entry of those
-        mips (full-mip rewrites: remap). ``snapshot`` is the manifest a
-        READ-MODIFY-WRITE caller resolved for its survivors read — the
-        publish compare-and-sets against THAT generation, so a
-        survivors set computed from a stale snapshot can never publish
-        (write-only commits leave it unset and resolve here, under the
-        lock).
+        """Distributed commit: stage the CHUNK_SCHEMA rows of ``out``
+        with :meth:`_stage_commit` (one Spark write) and publish them
+        through :meth:`_commit_generation`. ``drop`` lists (mip, slab)
+        partitions whose every row was deleted; ``replace_mips`` drops
+        EVERY previous entry of those mips (full-mip rewrites: remap).
+        ``snapshot`` is the manifest a READ-MODIFY-WRITE caller
+        resolved for its survivors read (see :meth:`_commit_generation`)."""
+        def stage(man, commit_id):
+            staged = {f"{int(m)}/{int(s)}": None for (m, s) in (drop or ())}
+            staged.update(self._stage_commit(out, commit_id))
+            return staged
+
+        self._commit_generation(stage, replace_mips=replace_mips,
+                                snapshot=snapshot)
+
+    def _commit_generation(self, stage, replace_mips: Optional[Iterable[int]] = None,
+                           snapshot=_UNRESOLVED) -> None:
+        """Snapshot commit, the one publish path both stagers share:
+        ``stage(manifest, commit_id)`` writes the touched ``(mip, slab)``
+        datasets as IMMUTABLE dirs under ``chunks/data/<commit-id>`` and
+        returns their entries ``{"M/S": reldir}`` (None drops the
+        entry); this then publishes the next numbered manifest
+        generation. The rewrite unit is the slab, never the table;
+        readers holding a previous manifest keep a consistent snapshot
+        (their dirs are never touched — old generations are reclaimed
+        by :meth:`vacuum`). ``replace_mips`` drops EVERY previous entry
+        of those mips. ``snapshot`` is the manifest a caller already
+        resolved under the lock for its survivors read — the publish
+        compare-and-sets against THAT generation, so a survivors set
+        computed from a stale snapshot can never publish (unset, the
+        manifest resolves here, under the lock, and ``stage`` reads its
+        survivors from it).
 
         All path manipulation routes through :class:`PathOps` (Hadoop
         FileSystem for s3a/gs/hdfs/file URIs, os/shutil for plain local
@@ -1176,14 +1221,16 @@ class Volume:
             old_entries = dict(man["entries"]) if man else {}
             entries = dict(old_entries)
             commit_id = f"commit-{uuid.uuid4().hex[:12]}"
-            staged = self._stage_commit(out, commit_id)
+            staged = stage(man, commit_id)
             for m in (replace_mips or ()):
                 prefix = f"{int(m)}/"
                 entries = {k: v for k, v in entries.items()
                            if not k.startswith(prefix)}
-            for (m, s) in (drop or ()):
-                entries.pop(f"{int(m)}/{int(s)}", None)
-            entries.update(staged)
+            for k, rel in staged.items():
+                if rel is None:
+                    entries.pop(k, None)
+                else:
+                    entries[k] = rel
             self._publish_manifest(entries, expect_generation=gen,
                                    old_entries=old_entries)
 
@@ -1217,10 +1264,11 @@ class Volume:
         so each slab lands wholly in one task → exactly one file."""
         fs = self._fs
         root = f"{self.chunks_path}/data/{commit_id}"
+        if bucket is None:
+            bucket = F.shiftrightunsigned(F.col("morton"), self._commit_bucket())
         (
             out.withColumn("pm", F.col("mip")).withColumn("ps", F.col("slab"))
-            .repartition(F.col("mip"),
-                         self._commit_bucket() if bucket is None else bucket)
+            .repartition(F.col("mip"), bucket)
             .sortWithinPartitions("slab", "morton")
             .write.mode("overwrite")
             .option("compression", "none")  # blobs carry their own gzip
@@ -2349,19 +2397,20 @@ class Volume:
         return self.chunks_path + ".commit-lock"
 
     def _commit_lock(self):
-        """Exclusive whole-table commit lock (see _overwrite_slabs).
+        """Exclusive whole-table commit lock (see _commit_generation).
 
         Re-entrant within one THREAD of one Volume instance so the
-        commit entry points (_commit_rows, delete_region, apply_remap,
-        downsample) can take the lock BEFORE their read snapshot — the
-        file listing captured by ``spark.read.parquet`` must not
-        predate another writer's slab swap, or the merge stages
-        survivors from a stale listing and silently drops the other
-        writer's chunks — while _overwrite_slabs keeps its own guard
-        for direct callers. The depth is thread-local: a second driver
-        thread sharing this Volume contends on the lock file like any
-        external writer (an instance-wide counter would let it ride
-        the first thread's lock and race the stage-and-swap)."""
+        commit entry points (delete_region, apply_remap, downsample)
+        can take the lock BEFORE their read snapshot — the manifest
+        resolve (and the file listing ``spark.read.parquet`` captures
+        from it) must not predate another writer's slab swap, or the
+        merge stages survivors from a stale listing and silently drops
+        the other writer's chunks — while _commit_generation keeps its
+        own guard for direct callers. The depth is thread-local: a
+        second driver thread sharing this Volume contends on the lock
+        file like any external writer (an instance-wide counter would
+        let it ride the first thread's lock and race the
+        stage-and-swap)."""
         from contextlib import contextmanager
 
         fs = self._fs

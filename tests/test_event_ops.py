@@ -369,6 +369,23 @@ def test_top_paths_rejects_n_below_two(spark, tmp_path):
         top_paths(events, n=1)
 
 
+def test_top_paths_unbounded_k_avoids_in_memory_top_k(spark, tmp_path):
+    """An in-memory top-k preallocates 2k slots per task, so k=10**9
+    (16 GB a task) must plan as a sort + limit; the registered k=20
+    stays a TakeOrderedAndProject."""
+    from cloud_volume_spark.operators.relational import top_paths
+
+    sf = _write_events(spark, tmp_path, [(1, _ts(0), 1, "a", 0.0, "{}")])
+    events = spark.read.parquet(f"{sf}/events.parquet")
+
+    def plan(k):
+        q = top_paths(events, n=2, k=k)
+        return q._jdf.queryExecution().executedPlan().toString()
+
+    assert "TakeOrderedAndProject" in plan(20)
+    assert "TakeOrderedAndProject" not in plan(10 ** 9)
+
+
 def test_funnel_rejects_duplicate_stages(spark, tmp_path):
     """A repeated stage would join two identically-named <stage>_ts
     frames (ambiguous reference at best); both funnel forms refuse."""

@@ -237,20 +237,22 @@ def test_commit_lock_precedes_read_snapshot(spark, tmp_path, monkeypatch):
     lock = vol._commit_lock_path
     assert vol._fs.create_exclusive(lock)
 
+    # the commit's first read is the manifest resolve its survivors
+    # files come from
     snapshots = []
-    orig = V.chunks_df
+    orig = V._read_manifest
 
     def guard(self):
         snapshots.append(1)
         return orig(self)
 
-    monkeypatch.setattr(V, "chunks_df", guard)
+    monkeypatch.setattr(V, "_read_manifest", guard)
     patch = np.zeros((32, 32, 32, 1), dtype=np.uint32)
     with pytest.raises(CommitConflictError, match="commit lock"):
         vol.upload(patch, offset=(0, 0, 0))
     assert not snapshots, "snapshot read before lock acquisition"
 
-    monkeypatch.setattr(V, "chunks_df", orig)
+    monkeypatch.setattr(V, "_read_manifest", orig)
     vol._fs.remove(lock)
     vol.upload(patch, offset=(0, 0, 0))  # succeeds after release
     out = vol.cutout(Bbox((0, 0, 0), (32, 32, 32)))
@@ -303,6 +305,141 @@ def test_commit_lock_not_shared_across_threads(spark, tmp_path):
     vol.upload(patch, offset=(0, 0, 0))
     assert np.array_equal(
         vol.cutout(Bbox((0, 0, 0), (32, 32, 32))), patch)
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_driver_commit_files_interchangeable(spark, tmp_path, monkeypatch,
+                                             scheme):
+    """Uploads stage on the driver with pyarrow; the files they write
+    must be indistinguishable from the Spark stager's to every reader
+    and maintenance path, on a plain local path and on the Hadoop
+    PathOps branch (file://). Starts from a Spark-written table so the
+    uploads merge into Spark-written survivors."""
+    import pyarrow.parquet as pq
+
+    from cloud_volume_spark.catalog import VolumeInfo
+    from cloud_volume_spark.volume import CHUNK_SCHEMA
+
+    # two chunks per file, so slab dirs hold several bucket groups
+    monkeypatch.setattr(Volume, "_commit_bucket", lambda self: 1)
+    n, cs = 64, 16
+    info = VolumeInfo.create(
+        layer_type="segmentation", data_type="uint32", num_channels=1,
+        resolution=(1, 1, 1), voxel_offset=(0, 0, 0),
+        volume_size=(n, n, n), chunk_size=(cs, cs, cs), encoding="raw")
+    # 8 chunks per slab: slab 0 is the 2x2x2 cells at the origin
+    vol = Volume.create(spark, f"{scheme}{tmp_path}/drv", info, slab_shift=3)
+    rng = np.random.default_rng(7)
+    mirror = rng.integers(1, 50, (n, n, n, 1)).astype(np.uint32)
+    grid = [(x, y, z) for x in range(4) for y in range(4) for z in range(4)]
+    blocks = [
+        (x * cs, x * cs + cs, y * cs, y * cs + cs, z * cs, z * cs + cs,
+         bytearray(mirror[x * cs:x * cs + cs, y * cs:y * cs + cs,
+                          z * cs:z * cs + cs].tobytes(order="F")))
+        for (x, y, z) in grid]
+    vol.write_blocks_df(spark.createDataFrame(
+        blocks, "x0 int, x1 int, y0 int, y1 int, z0 int, z1 int, "
+                "blob binary"))
+    present = set(grid)
+    local = vol._local_chunks_dir()
+    spark_file = next(
+        f"{local}/{rel}/{f}" for rel in vol._read_manifest()["entries"].values()
+        for f in sorted(vol._fs.listdir(f"{vol.chunks_path}/{rel}"))
+        if f.endswith(".parquet"))
+
+    def upload(arr, lo, **kw):
+        before = vol._read_manifest()["entries"]
+        vol.upload(arr, offset=lo, **kw)
+        hi = [a + s for a, s in zip(lo, arr.shape)]
+        mirror[lo[0]:hi[0], lo[1]:hi[1], lo[2]:hi[2]] = arr
+        # the driver stager's layout: one file per morton >> bucket group
+        shift = vol._commit_bucket()
+        for rel in set(vol._read_manifest()["entries"].values()) \
+                - set(before.values()):
+            files = [f for f in vol._fs.listdir(f"{vol.chunks_path}/{rel}")
+                     if f.endswith(".parquet")]
+            groups = []
+            for f in files:
+                t = pq.read_table(f"{local}/{rel}/{f}")
+                assert t.schema == pq.read_schema(spark_file)
+                g = {m >> shift for m in t["morton"].to_pylist()}
+                assert len(g) == 1, (rel, f, g)
+                groups += g
+            assert len(groups) == len(set(groups)), rel
+
+    # aligned: two chunks in slab 1
+    upload(rng.integers(1, 50, (32, 16, 16, 1)).astype(np.uint32),
+           (32, 0, 0))
+    # unaligned: read-modify-write of the 2x2x2 envelope
+    upload(rng.integers(1, 50, (20, 20, 20, 1)).astype(np.uint32),
+           (5, 7, 9))
+    # delete_black: all of slab 0 goes, so its entry must leave the
+    # manifest; then half of a 2x2x1 patch in slab 1 goes
+    upload(np.zeros((32, 32, 32, 1), np.uint32), (0, 0, 0),
+           delete_black_uploads=True)
+    present -= {(x, y, z) for x in (0, 1) for y in (0, 1) for z in (0, 1)}
+    assert "0/0" not in vol._read_manifest()["entries"]
+    half = rng.integers(1, 50, (32, 32, 16, 1)).astype(np.uint32)
+    half[:16] = 0
+    upload(half, (32, 0, 0), delete_black_uploads=True)
+    present -= {(2, 0, 0), (2, 1, 0)}
+
+    def check():
+        rows = vol.chunks_df().collect()
+        assert sorted((r.cx, r.cy, r.cz) for r in rows) == sorted(present)
+        for r in rows:
+            want = mirror[r.x0:r.x1, r.y0:r.y1, r.z0:r.z1]
+            assert r.compression == "gzip"
+            assert list(r.labels_stats) == [int(v) for v in np.unique(want)]
+        assert [(f.name, f.dataType) for f in vol.chunks_df().schema] == \
+            [(f.name, f.dataType) for f in CHUNK_SCHEMA]
+        got = np.zeros_like(mirror)
+        for b in vol.blocks_df().collect():
+            # blocks carry the F-order bytes of the (x, y, z, c) piece
+            got[b.x0:b.x1, b.y0:b.y1, b.z0:b.z1] = np.frombuffer(
+                b.blob, np.uint32).reshape(
+                    (1, b.z1 - b.z0, b.y1 - b.y0, b.x1 - b.x0)).transpose()
+        want = mirror.copy()
+        for (x, y, z) in set(grid) - present:
+            want[x * cs:x * cs + cs, y * cs:y * cs + cs,
+                 z * cs:z * cs + cs] = 0
+        assert np.array_equal(got, want)
+        assert np.array_equal(
+            vol.cutout(vol.bounds, fill_missing=True), want)
+        labels = sorted(r.label for r in vol.unique().collect())
+        assert labels == sorted(int(v) for v in np.unique(want[want != 0]))
+        report = vol.fsck()
+        assert report["ok"] and not report["missing_dirs"], report
+
+    check()
+    assert vol.compact() >= 1
+    check()
+    vol.vacuum(keep_manifests=1)
+    check()
+    assert not vol.fsck()["orphan_dirs"]
+
+
+def test_upload_runs_no_spark_job(spark, tmp_path):
+    """The driver commit is the whole mechanism behind upload latency:
+    neither a from_numpy ingest nor an upload onto an existing table
+    may start a Spark job."""
+    sc = spark.sparkContext
+    group = f"upload-no-jobs-{tmp_path.name}"
+    arr = np.arange(64 ** 3, dtype=np.uint32).reshape(64, 64, 64, 1)
+    patch = np.full((32, 32, 32, 1), 7, np.uint32)
+    sc.setJobGroup(group, "upload")
+    try:
+        vol = Volume.from_numpy(spark, arr, str(tmp_path / "nojob"),
+                                chunk_size=(32, 32, 32))
+        vol.upload(patch, offset=(32, 0, 0))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the probe sees jobs under this group when there are some
+        assert vol.chunks_df().count() == 8
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert np.array_equal(
+        vol.cutout(Bbox((32, 0, 0), (64, 32, 32))), patch)
 
 
 # ---------------------------------------------------------------------------
@@ -1288,11 +1425,8 @@ def test_compact_single_file_per_slab_and_cdf_silence(
     compacted dirs."""
     import os as _os
 
-    from pyspark.sql import functions as F
-
     # per-chunk buckets so the initial commit writes many files per slab
-    monkeypatch.setattr(Volume, "_commit_bucket",
-                        lambda self: F.col("morton"))
+    monkeypatch.setattr(Volume, "_commit_bucket", lambda self: 0)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                    "false")
     try:
@@ -1345,10 +1479,7 @@ def test_compact_does_not_trigger_incremental_downsample(
     """A compaction between generation N and now must not make
     downsample(since_generation=N) re-reduce anything: the diff is
     data_change=false only, so the incremental leg publishes nothing."""
-    from pyspark.sql import functions as F
-
-    monkeypatch.setattr(Volume, "_commit_bucket",
-                        lambda self: F.col("morton"))
+    monkeypatch.setattr(Volume, "_commit_bucket", lambda self: 0)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                    "false")
     try:
@@ -1379,10 +1510,7 @@ def test_repair_feed_backfills_compaction_without_predecessor(
     batch read for nothing."""
     import os as _os
 
-    from pyspark.sql import functions as F
-
-    monkeypatch.setattr(Volume, "_commit_bucket",
-                        lambda self: F.col("morton"))
+    monkeypatch.setattr(Volume, "_commit_bucket", lambda self: 0)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                    "false")
     try:
@@ -1645,10 +1773,7 @@ def test_compact_crash_before_publish_leaves_table_intact(
     vacuum."""
     import os as _os
 
-    from pyspark.sql import functions as F
-
-    monkeypatch.setattr(Volume, "_commit_bucket",
-                        lambda self: F.col("morton"))
+    monkeypatch.setattr(Volume, "_commit_bucket", lambda self: 0)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                    "false")
     try:
@@ -1852,8 +1977,6 @@ def test_stream_ingest_interleaves_with_live_compact(
     a mid-stream compaction can delay a batch, never lose one."""
     import os as _os
 
-    from pyspark.sql import functions as F
-
     from cloud_volume_spark.volume import CommitConflictError
 
     # fragment the initial commit (many files per slab) so the
@@ -1870,8 +1993,7 @@ def test_stream_ingest_interleaves_with_live_compact(
     vol = Volume.create(spark, str(tmp_path / "singc"), info,
                         slab_shift=2)
     arr = np.arange(64 ** 3, dtype=np.uint32).reshape(64, 64, 64, 1)
-    monkeypatch.setattr(Volume, "_commit_bucket",
-                        lambda self: F.col("morton"))
+    monkeypatch.setattr(Volume, "_commit_bucket", lambda self: 0)
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
                    "false")
     try:

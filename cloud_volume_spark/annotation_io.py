@@ -584,8 +584,9 @@ class PrecomputedAnnotationReader:
     def get_by_bbox(self, bbox: Bbox, mip: int = -1,
                     exact: bool = True) -> DataFrame:
         """Grid cells overlapping ``bbox`` decode in parallel; ``exact``
-        post-filters to the precise box (reference ``reader.py:224-306``
-        + ``metadata.py:62-111`` crop)."""
+        post-filters to the half-open box ``[minpt, maxpt)`` — the rule
+        of ``Bbox.contains`` and ``AnnotationLayer.get_by_bbox``
+        (reference ``reader.py:224-306`` + ``metadata.py:62-111`` crop)."""
         lower = np.array(self.info["lower_bound"], dtype=float)
         cs = self.chunk_size(mip)
         shape = self.grid_shape(mip)
@@ -612,9 +613,8 @@ class PrecomputedAnnotationReader:
         if exact:
             axes = list(self.dimensions.keys())
             for i, ax in enumerate(axes[:rank]):
-                df = df.where(F.col(ax).between(
-                    float(bbox.minpt[i]), float(bbox.maxpt[i])
-                ))
+                df = df.where((F.col(ax) >= float(bbox.minpt[i]))
+                              & (F.col(ax) < float(bbox.maxpt[i])))
         return df
 
     def _decode_cells(self, cells: list[tuple], mip: int) -> DataFrame:

@@ -13,21 +13,25 @@ tabular — here the table IS the layer:
                 rel_<name> ARRAY<LONG>)
 
 - by-id lookup        → ``WHERE id IN (...)``       (reader.py:193)
-- bbox query          → coordinate range filter      (reader.py:224)
+- bbox query          → half-open coordinate range filter, read on the
+                        driver like the reference's client-side lookup
+                        (reader.py:224); no Spark job
 - relationship query  → explode(rel_) filter / join  (reader.py:308)
 - spatial grid        → derived (gx,gy,gz) cell cols; parquet min/max
-                        stats prune exactly like the reference's
-                        ``.spatial`` cell files
+                        stats prune row groups exactly like the
+                        reference's ``.spatial`` cell files
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cloud_volume_spark.fs import PathOps, parquet_files, read_parquet
 from cloud_volume_spark.geometry import Bbox
 
 ANNOTATION_TYPES = (
@@ -90,7 +94,6 @@ class AnnotationLayer:
         return os.path.join(self.base_path, "annotations")
 
     def commit_info(self) -> None:
-        os.makedirs(self.base_path, exist_ok=True)
         info = {
             "@type": "neuroglancer_annotations_v1",
             "annotation_type": self.annotation_type,
@@ -103,13 +106,14 @@ class AnnotationLayer:
                 "chunk_size": list(self.grid_cell),
             }],
         }
-        with open(os.path.join(self.base_path, "info"), "w") as f:
-            f.write(json.dumps(info, sort_keys=True))
+        PathOps(self.base_path, self.spark).write_bytes(
+            f"{self.base_path}/info",
+            json.dumps(info, sort_keys=True).encode("utf-8"))
 
     @classmethod
     def open(cls, spark: SparkSession, base_path: str) -> "AnnotationLayer":
-        with open(os.path.join(base_path, "info")) as f:
-            info = json.load(f)
+        info = json.loads(
+            PathOps(base_path, spark).read_bytes(f"{base_path}/info"))
         return cls(
             spark, base_path,
             annotation_type=info["annotation_type"],
@@ -217,40 +221,29 @@ class AnnotationLayer:
         return self.df().where(F.col("id").isin([int(i) for i in ids]))
 
     def get_by_bbox(self, bbox: Bbox, exact: bool = True) -> DataFrame:
-        """reader.py:224-306: coarse pass = grid-cell ranges (pruned
-        scan), ``exact`` crops to the precise box like the reference's
-        post-filter (annotation/metadata.py:62-111)."""
-        import math
-
-        (x0, y0, z0), (x1, y1, z1) = bbox.minpt, bbox.maxpt
+        """reader.py:224-306, a client-side lookup as in the reference:
+        the layer's files are read on the driver (no Spark job) with
+        the grid-cell ranges as row-group filters; ``exact`` crops to
+        the precise box like the reference's post-filter
+        (annotation/metadata.py:62-111). Returned as a DataFrame with
+        :meth:`df`'s columns."""
         gcell = self.grid_cell
         # exclusive max → last intersecting cell is ceil(hi/cs)-1: the
         # old int((x1-1)//cs) assumed >=1-unit integer boxes and made
         # sub-unit float boxes straddling a cell boundary return EMPTY
-        lo = [int(math.floor(float(v) / gcell[i]))
-              for i, v in enumerate((x0, y0, z0))]
-        hi = [int(math.ceil(float(v) / gcell[i])) - 1
-              for i, v in enumerate((x1, y1, z1))]
-        df = (
-            self.df()
-            .where(F.col("gx").between(lo[0], hi[0]))
-            .where(F.col("gy").between(lo[1], hi[1]))
-            .where(F.col("gz").between(lo[2], hi[2]))
-        )
-        if exact:
-            # strict < for the exclusive max: the old between(lo,
-            # hi - 1e-9) epsilon is absorbed by double rounding above
-            # ~9e6 (nm-scale coordinates), silently turning [lo, hi)
-            # into [lo, hi] — and wrongly excludes [hi-1e-9, hi) below
-            df = (
-                df.where((F.col("x") >= float(x0))
-                         & (F.col("x") < float(x1)))
-                .where((F.col("y") >= float(y0))
-                       & (F.col("y") < float(y1)))
-                .where((F.col("z") >= float(z0))
-                       & (F.col("z") < float(z1)))
-            )
-        return df
+        filters = []
+        for i, a in enumerate("xyz"):
+            lo, hi = float(bbox.minpt[i]), float(bbox.maxpt[i])
+            filters += [(f"g{a}", ">=", int(math.floor(lo / gcell[i]))),
+                        (f"g{a}", "<=", int(math.ceil(hi / gcell[i])) - 1)]
+            if exact:
+                # half-open [minpt, maxpt), the rule of Bbox.contains:
+                # strict < for the exclusive max (an epsilon is absorbed
+                # by double rounding at nm-scale coordinates)
+                filters += [(a, ">=", lo), (a, "<", hi)]
+        ops = PathOps(self.data_path, self.spark)
+        return self.spark.createDataFrame(read_parquet(
+            ops, parquet_files(ops, self.data_path), filters=filters))
 
     def get_by_relationship(self, relationship: str, labels: Iterable[int]) -> DataFrame:
         """reader.py:308-354: all annotations related to these segids."""

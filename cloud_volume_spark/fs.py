@@ -18,12 +18,14 @@ layer a table format (Delta/Iceberg) over the same parquet layout.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
 import warnings
 from typing import List
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 # Schemes whose JVM create-if-absent primitives are atomic by contract
@@ -460,7 +462,13 @@ class PathOps:
         if self._local is not None:
             with open(local_part(path), "rb") as f:
                 return f.read()
-        stream = self._fs.open(self._Path(path))
+        try:
+            stream = self._fs.open(self._Path(path))
+        except Py4JJavaError as e:  # one not-found error on every scheme
+            if e.java_exception.getClass().getName() == \
+                    "java.io.FileNotFoundException":
+                raise FileNotFoundError(path) from e
+            raise
         try:
             return bytes(self._IOUtils.toByteArray(stream))
         finally:
@@ -496,3 +504,129 @@ class PathOps:
                     pass
         finally:
             out.close()
+
+
+def parquet_files(ops: PathOps, path: str) -> List[str]:
+    """The data files Spark's parquet reader sees under the directory
+    ``path``, sorted: names starting with ``_`` or ``.`` are skipped,
+    and a streaming file sink's output (it holds ``_spark_metadata``)
+    gives only the files its log commits. Every caller reads a dir a
+    commit left non-empty, so an empty listing means the dir vanished:
+    it raises ``FileNotFoundError``."""
+    names = ops.listdir(path)
+    if "_spark_metadata" in names:
+        names = _sink_log_files(ops, f"{path}/_spark_metadata")
+    files = sorted(f"{path}/{n}" for n in names
+                   if not n.startswith(("_", ".")))
+    if not files:
+        raise FileNotFoundError(f"no parquet data file under {path!r}")
+    return files
+
+
+def _sink_log_files(ops: PathOps, log_dir: str) -> List[str]:
+    """Names a file-sink log commits: its newest ``<batch>.compact``
+    file and every later ``<batch>`` file, each a version line and then
+    one JSON entry per file."""
+    import json
+    from urllib.parse import unquote, urlparse
+
+    batches = {int(n.split(".")[0]): n for n in ops.listdir(log_dir)
+               if n.split(".")[0].isdigit()}
+    start = max((b for b, n in batches.items() if n.endswith(".compact")),
+                default=-1)
+    live = {}
+    for b in sorted(b for b in batches if b >= start):
+        log = ops.read_bytes(f"{log_dir}/{batches[b]}").decode()
+        for e in map(json.loads, filter(str.strip, log.splitlines()[1:])):
+            name = unquote(urlparse(e["path"]).path).rsplit("/", 1)[-1]
+            live[name] = e.get("action") != "delete"
+    return [n for n, keep in live.items() if keep]
+
+
+@functools.cache
+def _read_pool():
+    """The driver reader's worker threads, started on first use and
+    shared by every read: a new pool per read held 6-8 MB more driver
+    RSS on the serving benchmark (4 vCPU) than one kept pool of 4."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    return ThreadPoolExecutor(max_workers=4,
+                              thread_name_prefix="read_parquet")
+
+
+def _may_match(row_group, filters) -> bool:
+    """False when a row group's min/max statistics rule out a filter."""
+    stats = {row_group.column(j).path_in_schema:
+             row_group.column(j).statistics
+             for j in range(row_group.num_columns)}
+    for c, op, v in filters:
+        st = stats.get(c)
+        if op == "not in" or st is None or not st.has_min_max:
+            continue
+        lo, hi = st.min, st.max
+        if not (lo <= v <= hi if op == "==" else lo < v if op == "<"
+                else lo <= v if op == "<=" else hi > v if op == ">"
+                else hi >= v if op == ">="
+                else any(lo <= x <= hi for x in v)):
+            return False
+    return True
+
+
+def _matches(t, c: str, op: str, v):
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if op in ("in", "not in"):
+        hit = pc.is_in(t[c], value_set=pa.array(v).cast(t[c].type))
+        return pc.invert(hit) if op == "not in" else hit
+    return {"==": pc.equal, "<": pc.less, "<=": pc.less_equal,
+            ">": pc.greater, ">=": pc.greater_equal}[op](t[c], v)
+
+
+def read_parquet(ops: PathOps, files: List[str], columns=None,
+                 filters=(), schema=None):
+    """Read parquet ``files`` on the driver into one ``pyarrow.Table``,
+    with no Spark job, on every scheme :class:`PathOps` serves: one
+    ``read_bytes`` per file, several files fetched concurrently.
+    ``columns`` projects; ``filters``, a conjunction of ``(column, op,
+    value)`` comparisons (``==``, ``<``, ``<=``, ``>``, ``>=``, ``in``,
+    ``not in``), prunes row groups by their statistics and then rows.
+    The schema is ``schema``, else that of ``files[0]`` — Spark's rule
+    without ``mergeSchema``: a column a file lacks reads as null, so a
+    file lacking a filter column gives no row. A file that is not
+    parquet raises ``IOError``, never reads as empty."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    filters = list(filters)
+    fcols = [c for c, _, _ in filters]
+
+    def read(path):
+        data = ops.read_bytes(path)
+        try:
+            f = pq.ParquetFile(pa.BufferReader(data))
+            have = f.schema_arrow
+            groups = [i for i in range(f.num_row_groups)
+                      if _may_match(f.metadata.row_group(i), filters)]
+            if not groups or not set(fcols) <= set(have.names):
+                return have, None
+            cols = None if columns is None else list(dict.fromkeys(
+                [c for c in columns if c in have.names] + fcols))
+            t = f.read_row_groups(groups, columns=cols, use_threads=False)
+        except pa.ArrowInvalid as exc:
+            raise IOError(f"corrupt parquet file {path!r}: {exc}") from exc
+        if filters:
+            t = t.filter(functools.reduce(
+                pc.and_, [_matches(t, *f) for f in filters]))
+        return have, t
+
+    parts = list(_read_pool().map(read, files) if len(files) > 1
+                 else map(read, files))
+    schema = (schema or parts[0][0]).remove_metadata()
+    if columns is not None:
+        schema = pa.schema([schema.field(c) for c in columns])
+    return pa.concat_tables([pa.Table.from_arrays([
+        t.column(f.name).cast(f.type) if f.name in t.column_names
+        else pa.nulls(t.num_rows, f.type) for f in schema], schema=schema)
+        for _, t in parts if t is not None] or [schema.empty_table()])

@@ -14,20 +14,27 @@ Here the index is one DataFrame:
                   x1 DOUBLE, y1 DOUBLE, z1 DOUBLE)
 
 one row per (label, covering cell) with that label's bbox within the
-cell. Build = a groupBy over the source table (seconds, distributed);
-query = pruned filter + distinct; per-label bbox = min/max agg — the
-hand-rolled Postgres binary-COPY distinct (:130-155) becomes Spark's
-stock distributed distinct.
+cell. Build = a groupBy over the source table (seconds, distributed).
+The lookups are client-side, as in the reference: ``query`` (cell
+filter + exact filter + distinct) and ``get_bbox`` (min/max) read the
+index files on the driver with pyarrow, pruning row groups on the
+sorted cell columns, and run no Spark job. ``df``, ``all_labels`` and
+``file_locations_per_label`` stay distributed.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from typing import Iterable, Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cloud_volume_spark.fs import PathOps, is_local, parquet_files, read_parquet
 from cloud_volume_spark.geometry import Bbox
 
 
@@ -71,8 +78,6 @@ class SpatialIndex:
         # its grid facts written to a LOCAL './gs:/...' dir and a
         # reopen elsewhere would silently fall back to the default
         # grid, the exact wrong-grid failure the sidecar exists to stop
-        from cloud_volume_spark.fs import PathOps
-
         return PathOps(self.base_path, spark=self.spark)
 
     def _load_meta(self):
@@ -152,38 +157,35 @@ class SpatialIndex:
 
     # ---- queries (reference :697-923) ---------------------------------
 
-    def _cell_pruned(self, bbox: Bbox) -> DataFrame:
-        import math
+    def _read(self, columns: list, filters: list) -> pa.Table:
+        ops = self._ops()
+        return read_parquet(ops, parquet_files(ops, self.data_path),
+                            columns, filters)
 
+    def _cell_filters(self, bbox: Bbox) -> list:
         cs, og = self.cell_size, self.grid_origin
-        (x0, y0, z0), (x1, y1, z1) = bbox.minpt, bbox.maxpt
         lo = [int(math.floor((float(v) - og[i]) / cs[i]))
-              for i, v in enumerate((x0, y0, z0))]
+              for i, v in enumerate(bbox.minpt)]
         # exclusive max → last intersecting cell is ceil(v/cs)-1: the
         # old int((x1-1)//cs) assumed integer coords and dropped the
         # final cell for fractional maxpts (the index stores DOUBLEs)
         hi = [int(math.ceil((float(v) - og[i]) / cs[i])) - 1
-              for i, v in enumerate((x1, y1, z1))]
-        return (
-            self.df()
-            .where(F.col("gx").between(lo[0], hi[0]))
-            .where(F.col("gy").between(lo[1], hi[1]))
-            .where(F.col("gz").between(lo[2], hi[2]))
-        )
+              for i, v in enumerate(bbox.maxpt)]
+        return [f for i, g in enumerate(("gx", "gy", "gz"))
+                for f in ((g, ">=", lo[i]), (g, "<=", hi[i]))]
 
     def query(self, bbox: Bbox, exact: bool = True) -> DataFrame:
-        """Labels intersecting the box (``query``, :837-923): pruned
-        cell filter → optional per-label bbox intersection test →
-        distributed distinct."""
-        df = self._cell_pruned(bbox)
+        """Labels intersecting the box (``query``, :837-923): cell
+        filter → optional per-label bbox intersection test → distinct,
+        on the driver; returned as a one-column ``label`` DataFrame."""
+        filters = self._cell_filters(bbox)
         if exact:
-            (x0, y0, z0), (x1, y1, z1) = bbox.minpt, bbox.maxpt
-            df = df.where(
-                (F.col("x0") < float(x1)) & (F.col("x1") >= float(x0))
-                & (F.col("y0") < float(y1)) & (F.col("y1") >= float(y0))
-                & (F.col("z0") < float(z1)) & (F.col("z1") >= float(z0))
-            )
-        return df.select("label").distinct()
+            for i, a in enumerate("xyz"):
+                filters += [(f"{a}0", "<", float(bbox.maxpt[i])),
+                            (f"{a}1", ">=", float(bbox.minpt[i]))]
+        labels = self._read(["label"], filters)["label"]
+        return self.spark.createDataFrame(
+            pa.table({"label": pc.unique(labels)}))
 
     def file_locations_per_label(self, labels: Iterable[int]) -> DataFrame:
         """Inverse index (:763-835): label → covering cells."""
@@ -200,21 +202,15 @@ class SpatialIndex:
         )
 
     def get_bbox(self, label: int) -> Bbox:
-        """Union envelope of a label's per-cell bboxes (:697-761)."""
-        r = (
-            self.df()
-            .where(F.col("label") == int(label))
-            .agg(
-                F.min("x0"), F.min("y0"), F.min("z0"),
-                F.max("x1"), F.max("y1"), F.max("z1"),
-            )
-            .collect()[0]
-        )
-        if r[0] is None:
+        """Union envelope of a label's per-cell bboxes (:697-761),
+        computed on the driver."""
+        t = self._read(["x0", "y0", "z0", "x1", "y1", "z1"],
+                       [("label", "==", int(label))])
+        lo = [pc.min(t[f"{a}0"]).as_py() for a in "xyz"]
+        hi = [pc.max(t[f"{a}1"]).as_py() for a in "xyz"]
+        if lo[0] is None:
             raise KeyError(f"label {label} not in spatial index")
-        import numpy as np
-
-        return Bbox((r[0], r[1], r[2]), (r[3], r[4], r[5]), dtype=np.float64)
+        return Bbox(lo, hi, dtype=np.float64)
 
     def all_labels(self) -> DataFrame:
         """Whole-dataset fast path (:857-888) — plain distinct."""
@@ -274,8 +270,6 @@ def export_spatial_files(index: SpatialIndex, out_dir: str) -> int:
       the reference writes these serially too) shape for a
       small-files interop format."""
     import json as _json
-
-    from cloud_volume_spark.fs import PathOps, is_local
 
     cs, og = index.cell_size, index.grid_origin
     bmax = index.bounds_max
@@ -346,8 +340,6 @@ def import_spatial_files(spark: SparkSession, src_dir: str,
     import json as _json
 
     import pandas as pd
-
-    from cloud_volume_spark.fs import PathOps
 
     src_ops = PathOps(src_dir, spark)
     names = sorted(

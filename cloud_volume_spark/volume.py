@@ -43,6 +43,7 @@ import json
 import os
 import shutil
 import uuid
+from types import SimpleNamespace
 from typing import Iterable, Optional, Sequence
 
 import numpy as np
@@ -52,10 +53,11 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from cloud_volume_spark import codecs
 from cloud_volume_spark.catalog import ENCODING_LEVEL_KEYS, VolumeInfo
-from cloud_volume_spark.fs import PathOps
+from cloud_volume_spark.fs import PathOps, parquet_files, read_parquet
 from cloud_volume_spark.chunking import compressed_morton_code
 from cloud_volume_spark.geometry import (
     AlignmentError, Bbox, OutOfBoundsError, Vec, reify_slices,
@@ -84,6 +86,7 @@ CHUNK_SCHEMA = StructType([
     StructField("blob", BinaryType(), False),
     StructField("labels_stats", ArrayType(LongType()), True),
 ])
+_CHUNK_ARROW_SCHEMA = to_arrow_schema(CHUNK_SCHEMA)
 
 BLOCK_SCHEMA = StructType([
     StructField("x0", IntegerType(), False),
@@ -592,8 +595,7 @@ class Volume:
                        slabs=None) -> list:
         """Data dirs under ``root`` for the given mip/slab selection —
         manifest-side pruning: unselected slabs are never even listed.
-        Shared by the Spark reader (root = chunks_path) and the local
-        pyarrow fast path (root = local dir)."""
+        Shared by the Spark reader and the driver reader."""
         want_slabs = None if slabs is None else {int(s) for s in slabs}
         out = []
         for k, rel in man["entries"].items():
@@ -808,101 +810,49 @@ class Volume:
             .where(F.col("cz").between(zlo, zhi))
         )
 
-    def _local_chunks_dir(self) -> Optional[str]:
-        """Filesystem directory of the chunk table, or None when the
-        volume lives on a remote store (s3a/gs/…)."""
-        p = self.chunks_path
-        if p.startswith("file://"):
-            return p[len("file://"):]
-        if "://" in p:
-            return None
-        return p
-
     def _collect_encoded_rows(self, bbox: Bbox, mip: int, columns: list):
-        """Driver-bounded encoded-chunk fetch.
-
-        On a local filesystem, read the pruned parquet fragments
-        directly with pyarrow (threaded, zero JVM hop, fragment-level
-        slab pruning via the morton Z-order) — the serving-path analog
-        of the reference's LRU/point-read fast path (SURVEY §4,
-        ``rx.py:381-430``). Returns None when the path is remote so
-        callers fall back to the Spark scan; the distributed
-        ``blocks_df`` path is unaffected.
-        """
-        local = self._local_chunks_dir()
-        if local is None:
-            return None
-        if not os.path.isdir(local):
-            return []
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-        from pyarrow import compute as pc
-
-        cs = self.info.chunk_size(mip)
-        off = self.info.voxel_offset(mip)
-        (xlo, xhi), (ylo, yhi), (zlo, zhi) = bbox.grid_ranges(cs, off)
-        filt = (
-            (pc.field("mip") == int(mip))
-            & (pc.field("cx") >= xlo) & (pc.field("cx") <= xhi)
-            & (pc.field("cy") >= ylo) & (pc.field("cy") <= yhi)
-            & (pc.field("cz") >= zlo) & (pc.field("cz") <= zhi)
-        )
-        # fragment pruning: the candidate slab set is derivable from the
-        # grid ranges (slab = morton >> SLAB_SHIFT), so whole data dirs
-        # drop out before any file is opened
+        """Driver-bounded encoded-chunk fetch: the manifest's candidate
+        slab dirs read by :func:`~cloud_volume_spark.fs.read_parquet`
+        (every scheme, no Spark job, files fetched concurrently) with
+        the chunk-grid ranges as row-group and row filters — the
+        serving-path analog of the reference's point-read fast path
+        (SURVEY §4, ``rx.py:381-430``). A referenced file that vanished
+        (a concurrent vacuum retiring a superseded generation)
+        re-resolves the manifest once; if the newest snapshot still
+        misses it, the ``FileNotFoundError`` propagates — a read never
+        answers background for data it could not open."""
+        ranges = bbox.grid_ranges(self.info.chunk_size(mip),
+                                  self.info.voxel_offset(mip))
+        filters = [("mip", "==", int(mip))] + [
+            f for c, (lo, hi) in zip(("cx", "cy", "cz"), ranges)
+            for f in ((c, ">=", lo), (c, "<=", hi))]
+        # the candidate slab set is derivable from the grid ranges
+        # (slab = morton >> SLAB_SHIFT): unselected dirs are never listed
         slabs = self._candidate_slabs(bbox, mip)
         if slabs is not None:
             if not slabs:
                 return []
-            filt = filt & pc.field("slab").isin(slabs)
-        man = self._read_manifest()
-        if man is None:
-            return []
-        try:
-            # manifest prune: list only the referenced dirs for the
-            # selected (mip, slab) keys — the snapshot the Spark reader
-            # would also resolve
-            dirs = self._manifest_dirs(man, local, mip=int(mip),
-                                       slabs=slabs)
-            files = [
-                os.path.join(d, f)
-                for d in dirs
-                for f in sorted(os.listdir(d))
-                if f.endswith(".parquet")
-            ]
-            if not files:
+            filters.append(("slab", "in", slabs))
+        for retry in (False, True):
+            man = self._read_manifest()
+            dirs = [] if man is None else self._manifest_dirs(
+                man, self.chunks_path, mip=int(mip), slabs=slabs)
+            if not dirs:
                 return []
-            dset = pads.dataset(files, format="parquet")
-            tbl = dset.to_table(columns=columns, filter=filt)
-        except FileNotFoundError:
-            # a file the manifest referenced vanished between listing
-            # and open — a concurrent vacuum retiring a superseded
-            # generation.  NOT "no chunks": fall back to the Spark
-            # reader, which re-reads the manifest and resolves the
-            # current snapshot.  Returning [] here would silently serve
-            # background data.
-            return None
-        except pa.ArrowInvalid as exc:
-            # corrupt/truncated parquet is a storage fault, never an
-            # empty region — surface it instead of filling background
-            raise IOError(
-                f"corrupt chunk-table fragment under {local!r}: {exc}"
-            ) from exc
-        cols = {}
-        for name in columns:
-            col = tbl.column(name)
-            if name == "blob":
-                # zero-copy buffers; gzip/np.frombuffer take any
-                # buffer-protocol object
-                cols[name] = [s.as_buffer() for s in col]
-            else:
-                cols[name] = col.to_pylist()
-        from types import SimpleNamespace
-
-        return [
-            SimpleNamespace(**{name: cols[name][i] for name in columns})
-            for i in range(tbl.num_rows)
-        ]
+            try:
+                tbl = read_parquet(
+                    self._fs, [f for d in dirs
+                               for f in parquet_files(self._fs, d)],
+                    columns, filters, schema=_CHUNK_ARROW_SCHEMA)
+                break
+            except FileNotFoundError:
+                if retry:
+                    raise
+        # blobs as zero-copy buffers: gzip/np.frombuffer take any
+        # buffer-protocol object
+        cols = [[b.as_buffer() for b in tbl[c]] if c == "blob"
+                else tbl[c].to_pylist() for c in columns]
+        return [SimpleNamespace(**dict(zip(columns, r))) for r in zip(*cols)]
 
     def _resolve_bbox(self, bbox_or_slices, mip: int) -> Bbox:
         bounds = self.info.bounds(mip)
@@ -1083,8 +1033,8 @@ class Volume:
     def _stage_rows(self, rows: list, mip: int, replaced: set,
                     man: Optional[dict], commit_id: str) -> dict:
         """Driver stager behind :meth:`_commit_rows`. For each touched
-        slab: read the snapshot's files with pyarrow through
-        :class:`PathOps` (local paths and ``scheme://`` URIs alike),
+        slab: read the snapshot's files with :func:`~cloud_volume_spark.
+        fs.read_parquet` (local paths and ``scheme://`` URIs alike),
         drop the ``replaced`` mortons (morton is the key within one
         mip), add ``rows``, sort by morton and write one uncompressed
         parquet file per ``morton >> _commit_bucket()`` group under
@@ -1094,12 +1044,10 @@ class Volume:
         (at most ``2**slab_shift`` encoded chunks). Returns manifest
         entries; a slab left with no rows maps to None (entry dropped)."""
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         fs = self._fs
-        schema = to_arrow_schema(CHUNK_SCHEMA)
+        schema = _CHUNK_ARROW_SCHEMA
         shift = self._commit_bucket()
         gone = pa.array(sorted(replaced), pa.int64())
         new_by_slab: dict = {}
@@ -1114,14 +1062,9 @@ class Volume:
             parts = []
             if key in entries:
                 d = f"{self.chunks_path}/{entries[key]}"
-                for n in sorted(fs.listdir(d)):
-                    if not n.endswith(".parquet"):
-                        continue
-                    t = pq.read_table(pa.BufferReader(
-                        fs.read_bytes(f"{d}/{n}"))).select(
-                            schema.names).cast(schema)
-                    parts.append(t.filter(pc.invert(
-                        pc.is_in(t["morton"], value_set=gone))))
+                parts.append(read_parquet(
+                    fs, parquet_files(fs, d), filters=[
+                        ("morton", "not in", gone)], schema=schema))
             if s in new_by_slab:
                 cols = zip(*new_by_slab[s])
                 parts.append(pa.Table.from_arrays(
@@ -2794,12 +2737,11 @@ class Volume:
                 "use blocks_df()/voxels_df() for DataFrame output"
             )
 
-        # Driver-decode fast path: the cutout is already driver-bounded
-        # (MAX_ASSEMBLE_VOXELS), so collect the ENCODED blobs and
-        # decode+shade locally — no executor Python stage, no second
-        # 100 MB round trip. On local storage the collect itself runs
-        # through pyarrow directly; blocks_df() remains the distributed
-        # decode path for larger-than-driver outputs.
+        # Driver-decode path: the cutout is already driver-bounded
+        # (MAX_ASSEMBLE_VOXELS), so read the ENCODED blobs on the driver
+        # and decode+shade locally — no Spark job, no executor Python
+        # stage. blocks_df() remains the distributed decode path for
+        # larger-than-driver outputs.
         sel = ["x0", "x1", "y0", "y1", "z0", "z1",
                "encoding", "compression", "blob"]
         bg = self.info.background_color()
@@ -2814,31 +2756,17 @@ class Volume:
         # fill_missing=False missing-chunk check still fires on label=
         # reads (stats-skipped is "present, label absent"; a missing
         # chunk is data loss and must stay loud)
-        n_present = None
         rows = self._collect_encoded_rows(
             bbox, mip, sel + (["labels_stats"] if want_stats else [])
         )
-        if rows is None:
-            pruned = self._pruned(bbox, mip)
-            if prune_stats:
-                if not fill:
-                    n_present = pruned.count()
-                # stats-column data skipping before any decode (stats
-                # hold the signed bit pattern — see _label_to_signed)
-                pruned = pruned.where(
-                    F.col("labels_stats").isNull()
-                    | F.array_contains("labels_stats", _label_to_signed(label))
-                )
-            rows = list(pruned.select(*sel).toPandas().itertuples(index=False))
-        elif prune_stats:
-            n_present = len(rows)
+        n_present = len(rows)
+        if prune_stats:
+            # stats hold the signed bit pattern — see _label_to_signed
             rows = [
                 r for r in rows
                 if r.labels_stats is None
                 or _label_to_signed(label) in r.labels_stats
             ]
-        if n_present is None:
-            n_present = len(rows)
 
         out = np.full(shape, bg, dtype=dtype)
 
@@ -3051,8 +2979,6 @@ class Volume:
                 ["x0", "x1", "y0", "y1", "z0", "z1",
                  "encoding", "compression", "blob"],
             )
-            if row is None:
-                row = self._pruned(bbox, mip).collect()
             if row:
                 self._lru_put(key, row[0])
         if not row:

@@ -317,9 +317,9 @@ def test_export_bbox_query(exported, spark):
     got = {r.id for r in rdr.get_by_bbox(bbox, mip=0).select("id").collect()}
     g = pdf[["x", "y", "z"]].astype(np.float32)
     mask = (
-        (g.x >= 100) & (g.x <= 600)
-        & (g.y >= 100) & (g.y <= 500)
-        & (g.z >= 50) & (g.z <= 250)
+        (g.x >= 100) & (g.x < 600)
+        & (g.y >= 100) & (g.y < 500)
+        & (g.z >= 50) & (g.z < 250)
     )
     assert got == {int(i) for i in pdf[mask.to_numpy()]["id"]}
 

@@ -115,7 +115,7 @@ def test_uri_write_read_roundtrip(uri_vol):
     vol, arr = uri_vol
     out = vol.cutout(Bbox((0, 0, 0), (128, 64, 64)))
     assert np.array_equal(out, arr)
-    # unaligned cutout exercises the Spark scan fallback too
+    # unaligned cutout: partial chunks read through the Hadoop branch
     out = vol.cutout(Bbox((10, 5, 3), (100, 60, 50)))
     assert np.array_equal(out, arr[10:100, 5:60, 3:50, :])
 

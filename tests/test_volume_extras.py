@@ -318,6 +318,7 @@ def test_driver_commit_files_interchangeable(spark, tmp_path, monkeypatch,
     import pyarrow.parquet as pq
 
     from cloud_volume_spark.catalog import VolumeInfo
+    from cloud_volume_spark.fs import local_part
     from cloud_volume_spark.volume import CHUNK_SCHEMA
 
     # two chunks per file, so slab dirs hold several bucket groups
@@ -341,7 +342,7 @@ def test_driver_commit_files_interchangeable(spark, tmp_path, monkeypatch,
         blocks, "x0 int, x1 int, y0 int, y1 int, z0 int, z1 int, "
                 "blob binary"))
     present = set(grid)
-    local = vol._local_chunks_dir()
+    local = local_part(vol.chunks_path)
     spark_file = next(
         f"{local}/{rel}/{f}" for rel in vol._read_manifest()["entries"].values()
         for f in sorted(vol._fs.listdir(f"{vol.chunks_path}/{rel}"))

@@ -16,6 +16,7 @@ import atexit
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -24,6 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import numpy as np
 import pandas as pd
+
+from cloud_volume_spark.session import session_cpus
 
 # Every registered query, benched: since r13 the one quadratic
 # verifier (ngram_jaccard_pairs) lives in the RETIRED local-parity
@@ -149,15 +152,40 @@ VOL_CHUNK = (256, 256, 50)
 # r14: the r13 driver artifact proved the single-thread probe BLIND to
 # many-core contention — seg-read recorded 34 MB/s (7.4x the gate) at
 # load1 17.37 with quiet_passes=3: a single Python thread still gets a
-# full core while 32-way Spark stages starve. Measured on this host: a
-# 16-process external load leaves the 1-thread probe at its nominal
-# 0.195 s while a 32-process probe inflates 0.30 -> 0.53 s. Each
-# bracket therefore now runs BOTH probes (st = 1-thread, mt = a
-# 32-process fork-pool spin whose wall time collapses exactly when
-# external processes compete for cores) and records load1. Two gates:
-#   - per-PASS: both brackets' st AND mt probes at nominal speed.
+# full core while the N-way Spark stages starve. Each bracket
+# therefore runs BOTH probes, counts the cores busy beside the st
+# probe and records load1:
+#   - st: a 1-thread spin, gated at the absolute CPU_PROBE_QUIET_SEC
+#     (idle 0.20 s on the r14 32-core host, 0.25-0.37 s on a 4-vCPU
+#     host).
+#   - mt: a fork-pool spin over MT_PROBE_PROCS processes, whose wall
+#     time collapses exactly when external processes compete for the
+#     cores the Spark stages use. It is as wide as those stages
+#     (session_cpus(), the local[N] of get_spark). Its gate is
+#     relative, MT_GATE_RATIO x the quiet baseline: the median mt
+#     reading of the brackets shown quiet on their own. Not the
+#     minimum: with bursts kept out by the busy check what is left is
+#     idle jitter, and the minimum of many idle readings sinks into
+#     its lower tail (0.28 s against 0.30-0.40 s idle on 4 vCPUs, a
+#     0.336 s gate that failed most idle brackets). An absolute gate
+#     does not travel between hosts: the r14 gate of 0.36 s, set for
+#     a 32-process probe on 32 cores, never passes on 4 vCPUs, where
+#     that probe reads 2.5-2.8 s idle. The ratio is the r14 gate over
+#     its idle reading, 0.36 / 0.30; on the r14 host that split idle
+#     jitter from 8-of-32-process contention (0.38-0.40 s).
+#   - busy: the cores busy beside the st spin, from /proc/stat over
+#     that spin (steal counts as busy). k busy cores stretch an N-wide
+#     probe on N cores by (N + k) / N, so more than BUSY_CORES_MAX =
+#     (MT_GATE_RATIO - 1) x N is contention the mt gate is there to
+#     flag. This is what keeps a load that was there before the first
+#     probe out of the baseline, where it would hide itself by
+#     raising the gate (on 4 vCPUs: idle -0.02-0.05 cores, 1.05-1.11
+#     with 1 external spinner, 2.01-2.05 with 2).
+# Two gates:
+#   - per-PASS: both brackets' st, busy AND mt probes at nominal
+#     speed. Only such a bracket's mt reading enters the baseline.
 #     Per-pass load1 is recorded for forensics but NOT gated — the
-#     60 s EMA counts the measured pass's own 32-way burst, so a
+#     60 s EMA counts the measured pass's own N-way burst, so a
 #     quiet host would self-flag by pass 3.
 #   - per-LEG: load1 read at leg ENTRY (we are idle there, after a
 #     bounded settle-wait for our own prior stages' decay) must be
@@ -167,12 +195,9 @@ VOL_CHUNK = (256, 256, 50)
 #     the whole leg is steal_flagged, which is the truth.
 CPU_PROBE_QUIET_SEC = float(
     os.environ.get("SPARK_GRAFT_CPU_QUIET_SEC", "0.4"))
-# 32-proc pool spin: idle 0.29-0.32 s on this host, 0.38+ with 8
-# external spinners, 0.52+ with 16 — threshold splits idle jitter
-# from 8-proc-class contention
-MT_PROBE_QUIET_SEC = float(
-    os.environ.get("SPARK_GRAFT_MT_QUIET_SEC", "0.36"))
-MT_PROBE_PROCS = int(os.environ.get("SPARK_GRAFT_MT_PROBE_PROCS", "32"))
+MT_GATE_RATIO = 0.36 / 0.30
+MT_PROBE_PROCS = session_cpus()
+BUSY_CORES_MAX = (MT_GATE_RATIO - 1) * MT_PROBE_PROCS
 MT_PROBE_SPIN = 5_000_000
 LOAD1_QUIET_MAX = float(
     os.environ.get("SPARK_GRAFT_LOAD1_QUIET_MAX", "4.0"))
@@ -181,7 +206,9 @@ LOAD1_SETTLE_SEC = float(
 VOL_BASE_PASSES = 4
 VOL_MAX_PASSES = 8
 
+MT_PROBE_FAILED = 999.0  # never-quiet sentinel (json-safe, unlike inf)
 _MT_POOL = None
+_MT_QUIET = []  # mt readings of the brackets shown quiet on their own
 
 
 def _drain_mt_pool() -> None:
@@ -231,7 +258,19 @@ def _mt_probe_sec() -> float:
         return round(time.perf_counter() - t0, 3)
     except Exception:
         _MT_POOL = None
-        return 999.0  # never-quiet sentinel (json-safe, unlike inf)
+        return MT_PROBE_FAILED
+
+
+def _mt_baseline() -> float | None:
+    """The quiet baseline, None before any bracket has been shown
+    quiet."""
+    return round(statistics.median(_MT_QUIET), 3) if _MT_QUIET else None
+
+
+def _mt_gate() -> float | None:
+    """The mt gate in effect: MT_GATE_RATIO x the quiet baseline."""
+    base = _mt_baseline()
+    return None if base is None else round(MT_GATE_RATIO * base, 3)
 
 
 def _load1() -> float:
@@ -239,14 +278,39 @@ def _load1() -> float:
         return float(fh.read().split()[0])
 
 
+def _cpu_jiffies() -> tuple:
+    """(busy, total) jiffies over all cores from /proc/stat; iowait
+    counts as idle, steal as busy."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:9]]
+    return sum(f) - f[3] - f[4], sum(f)
+
+
 def _probe() -> dict:
-    return {"st": _cpu_probe_sec(), "mt": _mt_probe_sec(),
-            "l1": round(_load1(), 2)}
+    """One bracket: the st spin with the cores busy beside it, then
+    the mt spin, then load1. A bracket whose st and busy readings show
+    a quiet host adds its mt reading to the quiet baseline; a failed
+    mt probe (MT_PROBE_FAILED) never enters it."""
+    busy0, total0 = _cpu_jiffies()
+    st = _cpu_probe_sec()
+    busy1, total1 = _cpu_jiffies()
+    cores = (os.cpu_count() or 1) * (busy1 - busy0) / max(total1 - total0, 1)
+    p = {"st": st, "mt": _mt_probe_sec(), "l1": round(_load1(), 2),
+         "busy": round(cores - 1, 2)}  # less the st spin's own core
+    if _host_quiet(p) and p["mt"] < MT_PROBE_FAILED:
+        _MT_QUIET.append(p["mt"])
+    return p
+
+
+def _host_quiet(p: dict) -> bool:
+    return p["st"] <= CPU_PROBE_QUIET_SEC and p["busy"] <= BUSY_CORES_MAX
 
 
 def _probe_quiet(p: dict) -> bool:
-    return (p["st"] <= CPU_PROBE_QUIET_SEC
-            and p["mt"] <= MT_PROBE_QUIET_SEC)
+    gate = _mt_gate()
+    # with no baseline yet, a successful reading is its own baseline
+    mt_ok = p["mt"] < MT_PROBE_FAILED if gate is None else p["mt"] <= gate
+    return _host_quiet(p) and mt_ok
 
 
 def _quiet_pass_ids(probes, entry_ok: bool = True) -> list:
@@ -316,6 +380,7 @@ def _quiet_leg(pass_fn, primary: str,
         **results[best],
         f"{primary}_all": [r[primary] for r in results],
         "probes_all": probes,
+        "mt_gate": _mt_gate(),
         "entry_load1": entry_load1,
         "quiet_passes": len(quiet),
         "steal_flagged": not quiet,
@@ -523,6 +588,7 @@ def bench_volume(spark) -> dict:
             "write_secs_all": [round(s, 3) for s in write_secs],
             "read_secs_all": [round(s, 3) for s in read_secs],
             "probes_all": probes,
+            "mt_gate": _mt_gate(),
             "entry_load1": entry_load1,
             "quiet_passes": len(quiet),
             "steal_flagged": not quiet,
@@ -601,6 +667,7 @@ def bench_volume_seg(spark) -> dict:
             "read_secs_all": [round(s, 3) for s in read_secs],
             "unique_secs_all": [round(s, 3) for s in uniq_secs],
             "probes_all": probes,
+            "mt_gate": _mt_gate(),
             "entry_load1": entry_load1,
             "quiet_passes": len(quiet),
             "steal_flagged": not quiet,
@@ -907,12 +974,17 @@ def main() -> None:
     point_stats = bench_point_read(spark)
 
     # environment probe: host contention varies round-to-round (VM on a
-    # shared box); loadavg + the two fixed probes (1-thread and
-    # 32-process) let the cross-round comparison normalize for it
+    # shared box); loadavg + the two probes (1-thread and one process
+    # per session core) let the cross-round comparison normalize for
+    # it. quiet_gates.mt is the final gate, with the baseline it is
+    # relative to; each leg records the gate its verdict was made at
     env = {"load1": _load1(), "cpu_probe_sec": _cpu_probe_sec(),
            "mt_probe_sec": _mt_probe_sec(),
            "quiet_gates": {"st": CPU_PROBE_QUIET_SEC,
-                           "mt": MT_PROBE_QUIET_SEC,
+                           "mt": _mt_gate(),
+                           "mt_baseline": _mt_baseline(),
+                           "mt_procs": MT_PROBE_PROCS,
+                           "busy_cores": round(BUSY_CORES_MAX, 2),
                            "load1": LOAD1_QUIET_MAX}}
 
     # Full-fidelity payload: printed on an EARLIER line and written to

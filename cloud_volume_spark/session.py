@@ -12,8 +12,20 @@ coalescing.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def session_cpus() -> int:
+    """Task slots of the local session ``get_spark`` builds: N for a
+    ``SPARK_MASTER`` of ``local[N]`` (``local[*]``: every core), else
+    ``SPARK_GRAFT_CPUS``, else ``os.cpu_count()``."""
+    m = re.fullmatch(r"local\[(\d+|\*)(?:,\d+)?\]",
+                     os.environ.get("SPARK_MASTER", ""))
+    if m:
+        return (os.cpu_count() or 4) if m.group(1) == "*" else int(m.group(1))
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def get_spark(
@@ -41,7 +53,7 @@ def get_spark(
             pkg_root + (os.pathsep + pythonpath if pythonpath else "")
         )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = session_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cpus, 8)))

@@ -544,14 +544,16 @@ def _sink_log_files(ops: PathOps, log_dir: str) -> List[str]:
 
 
 @functools.cache
-def _read_pool():
-    """The driver reader's worker threads, started on first use and
-    shared by every read: a new pool per read held 6-8 MB more driver
-    RSS on the serving benchmark (4 vCPU) than one kept pool of 4."""
+def driver_pool():
+    """The driver's kept worker threads, started on first use and
+    shared by :func:`read_parquet`'s file fetches and the cutout's chunk
+    decodes: a new pool per call held 6-8 MB more driver RSS on the
+    serving benchmark (4 vCPU) than one kept pool of 4. No task on this
+    pool may wait on the pool — with every worker waiting, nothing runs
+    the tasks they wait for."""
     from concurrent.futures import ThreadPoolExecutor
 
-    return ThreadPoolExecutor(max_workers=4,
-                              thread_name_prefix="read_parquet")
+    return ThreadPoolExecutor(max_workers=4, thread_name_prefix="driver")
 
 
 def _may_match(row_group, filters) -> bool:
@@ -621,7 +623,7 @@ def read_parquet(ops: PathOps, files: List[str], columns=None,
                 pc.and_, [_matches(t, *f) for f in filters]))
         return have, t
 
-    parts = list(_read_pool().map(read, files) if len(files) > 1
+    parts = list(driver_pool().map(read, files) if len(files) > 1
                  else map(read, files))
     schema = (schema or parts[0][0]).remove_metadata()
     if columns is not None:

@@ -9,6 +9,11 @@ optionally gzip-compressed.
 
 Both directions are Spark jobs over the chunk grid — executors read or
 write their own partition's files, the driver only lists directories.
+Imports store each file's payload as read through
+:func:`~cloud_volume_spark.volume.chunk_row` (stats from the codec's own
+``labels``); exports take each chunk's payload from
+:func:`~cloud_volume_spark.volume.decode_chunk`. Neither touches the
+chunk-row format itself.
 """
 
 from __future__ import annotations
@@ -21,15 +26,14 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import StringType
 
 from cloud_volume_spark import codecs
 from cloud_volume_spark.catalog import VolumeInfo
 from cloud_volume_spark.geometry import Bbox
-from cloud_volume_spark.volume import CHUNK_SCHEMA, Volume, _slab_of
-from cloud_volume_spark.chunking import compressed_morton_code
+from cloud_volume_spark.volume import (
+    CHUNK_COLUMNS, CHUNK_SCHEMA, Volume, chunk_row, decode_chunk,
+)
 
 
 def export_unsharded(vol: Volume, out_dir: str, mip: int = 0,
@@ -58,7 +62,7 @@ def export_unsharded(vol: Volume, out_dir: str, mip: int = 0,
         for pdf in batches:
             for r in pdf.itertuples(index=False):
                 bbox = Bbox((r.x0, r.y0, r.z0), (r.x1, r.y1, r.z1))
-                raw = codecs.decompress_stream(r.blob, r.compression or None)
+                raw = decode_chunk(r)
                 # compress_stream = the tuned deterministic gzip
                 # (level 6, mtime=0): level-9 here paid 2-3x CPU per
                 # chunk for <1% size, per codecs' own measurement
@@ -114,7 +118,6 @@ def import_pyramid(spark, src_dir: str, base_path: str,
     seg = info.layer_type == "segmentation"
     dtype = info.data_type
     nc = info.num_channels
-    comp = compression or ""
     # mip → (chunk_size, voxel_offset, grid, encoding, codec params)
     meta = {
         m: (
@@ -184,35 +187,15 @@ def import_pyramid(spark, src_dir: str, base_path: str,
                 cx = (int(bbox.minpt[0]) - voff[0]) // cs[0]
                 cy = (int(bbox.minpt[1]) - voff[1]) // cs[1]
                 cz = (int(bbox.minpt[2]) - voff[2]) // cs[2]
-                morton = int(compressed_morton_code((cx, cy, cz), grid))
-                blob = codecs.compress_stream(payload, comp or None)
-                if seg:
-                    shape = tuple(bbox.size3()) + (nc,)
-                    from cloud_volume_spark.volume import LABELS_STATS_CAP
-                    try:
-                        # codec-native fast path: reads only the label
-                        # streams where the codec supports it — incl.
-                        # foreign wheel-written compresso (v0/v1),
-                        # whose full decode is wheel-gated
-                        uniq = codecs.labels(payload, encoding, shape, dtype,
-                                             params=cparams)
-                        stats = (
-                            [int(u) for u in uniq]
-                            if uniq.size <= LABELS_STATS_CAP else None
-                        )
-                    except codecs.EncodingUnavailable:
-                        stats = None
-                else:
-                    stats = None
-                rows.append((
-                    int(r.mip), _slab_of(morton, slab_shift), int(cx), int(cy), int(cz),
-                    morton,
-                    int(bbox.minpt[0]), int(bbox.maxpt[0]),
-                    int(bbox.minpt[1]), int(bbox.maxpt[1]),
-                    int(bbox.minpt[2]), int(bbox.maxpt[2]),
-                    encoding, comp, blob, stats,
-                ))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
+                # the payload is stored as read; stats come from the
+                # codec's own label streams where it has them — incl.
+                # foreign wheel-written compresso (v0/v1), whose full
+                # decode is wheel-gated
+                rows.append(chunk_row(
+                    r.mip, cx, cy, cz, bbox, encoding, compression,
+                    grid=grid, slab_shift=slab_shift, payload=payload,
+                    stats=seg, dtype=dtype, nc=nc, params=cparams))
+            yield pd.DataFrame(rows, columns=CHUNK_COLUMNS)
 
     rows_df = files_df.mapInPandas(read_files, schema=CHUNK_SCHEMA)
     vol._overwrite_slabs(rows_df)
@@ -277,8 +260,7 @@ def export_sharded(vol: Volume, out_dir: str, mip: int = 0,
         sp = ShardingSpecification.from_dict(spec_dict)
         group = {}
         for r in pdf.itertuples(index=False):
-            raw = codecs.decompress_stream(r.blob, r.compression or None)
-            group[int(r.morton)] = raw
+            group[int(r.morton)] = decode_chunk(r)
         blob = synthesize_shard_file(sp, group)
         shard_no = str(keyvals[0])
         with open(os.path.join(scale_dir, f"{shard_no}.shard"), "wb") as f:
@@ -321,7 +303,6 @@ def import_sharded(spark, src_dir: str, base_path: str, mip: int = 0,
     seg = info.layer_type == "segmentation"
     dtype = info.data_type
     nc = info.num_channels
-    comp = compression or ""
 
     shard_files = sorted(
         n for n in os.listdir(scale_dir) if n.endswith(".shard")
@@ -333,7 +314,6 @@ def import_sharded(spark, src_dir: str, base_path: str, mip: int = 0,
 
     def read_shards(batches):
         sp = ShardingSpecification.from_dict(spec_dict)
-        from cloud_volume_spark.volume import LABELS_STATS_CAP
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -345,35 +325,11 @@ def import_sharded(spark, src_dir: str, base_path: str, mip: int = 0,
                         np.array(voff) + np.array([cx, cy, cz]) * np.array(cs),
                         cs,
                     ).clamp(bounds)
-                    blob = codecs.compress_stream(payload, comp or None)
-                    if seg:
-                        # same contract as the unsharded import path:
-                        # codecs.labels reads only the label streams
-                        # where the codec supports it, and an absent
-                        # optional wheel degrades to stats=None instead
-                        # of crashing the whole import
-                        shape = tuple(cell.size3()) + (nc,)
-                        try:
-                            uniq = codecs.labels(payload, encoding,
-                                                 shape, dtype,
-                                                 params=cparams)
-                            stats = (
-                                [int(u) for u in uniq]
-                                if uniq.size <= LABELS_STATS_CAP else None
-                            )
-                        except codecs.EncodingUnavailable:
-                            stats = None
-                    else:
-                        stats = None
-                    rows.append((
-                        int(mip), _slab_of(morton, slab_shift), int(cx), int(cy), int(cz),
-                        int(morton),
-                        int(cell.minpt[0]), int(cell.maxpt[0]),
-                        int(cell.minpt[1]), int(cell.maxpt[1]),
-                        int(cell.minpt[2]), int(cell.maxpt[2]),
-                        encoding, comp, blob, stats,
-                    ))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
+                    rows.append(chunk_row(
+                        mip, cx, cy, cz, cell, encoding, compression,
+                        grid=grid, slab_shift=slab_shift, payload=payload,
+                        stats=seg, dtype=dtype, nc=nc, params=cparams))
+            yield pd.DataFrame(rows, columns=CHUNK_COLUMNS)
 
     rows_df = files_df.mapInPandas(read_shards, schema=CHUNK_SCHEMA)
     vol._overwrite_slabs(rows_df)

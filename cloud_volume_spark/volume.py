@@ -18,10 +18,11 @@ Layout & scale design:
   design survives 100 TB volumes. A production deployment would swap
   the slab-overwrite for a table format's row-level MERGE; semantics
   here are identical.
-- ``labels_stats`` (distinct labels per chunk, capped) is written at
-  ingest for segmentation layers: ``unique``/``contains`` queries read
-  the stats column instead of decoding blobs — the Spark analog of the
-  reference's codec-native ``labels()`` fast path
+- ``labels_stats`` (distinct labels per chunk as signed longs, capped)
+  is written at ingest for segmentation layers by :func:`chunk_row`,
+  which makes every chunk row (:func:`decode_chunk` reads them):
+  ``unique``/``contains`` queries read the stats column instead of
+  decoding blobs — the Spark analog of the reference's codec-native ``labels()`` fast path
   (``chunks.py:362-393``) and ``contains`` early-exit (``rx.py:782``).
 - Decode/encode run as Arrow-batched ``mapInPandas`` UDFs; assembly
   ("shade", reference ``image/common.py:176-227``) happens driver-side
@@ -41,7 +42,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 from types import SimpleNamespace
 from typing import Iterable, Optional, Sequence
@@ -57,10 +57,12 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from cloud_volume_spark import codecs
 from cloud_volume_spark.catalog import ENCODING_LEVEL_KEYS, VolumeInfo
-from cloud_volume_spark.fs import PathOps, parquet_files, read_parquet
+from cloud_volume_spark.fs import (
+    PathOps, driver_pool, parquet_files, read_parquet,
+)
 from cloud_volume_spark.chunking import compressed_morton_code
 from cloud_volume_spark.geometry import (
-    AlignmentError, Bbox, OutOfBoundsError, Vec, reify_slices,
+    AlignmentError, Bbox, OutOfBoundsError, reify_slices,
 )
 
 SLAB_SHIFT = 6  # 2**6 = 64 chunks per slab partition
@@ -87,6 +89,7 @@ CHUNK_SCHEMA = StructType([
     StructField("labels_stats", ArrayType(LongType()), True),
 ])
 _CHUNK_ARROW_SCHEMA = to_arrow_schema(CHUNK_SCHEMA)
+CHUNK_COLUMNS = CHUNK_SCHEMA.fieldNames()
 
 BLOCK_SCHEMA = StructType([
     StructField("x0", IntegerType(), False),
@@ -133,6 +136,74 @@ def _stats_list(uniq: np.ndarray):
     if uniq.size > LABELS_STATS_CAP:
         return None
     return [_label_to_signed(u) for u in uniq]
+
+
+def _slab_of(morton: int, shift: int = SLAB_SHIFT) -> int:
+    return int(morton) >> int(shift)
+
+
+def chunk_row(mip, cx, cy, cz, extent: Bbox, encoding: str,
+              compression: Optional[str], *, grid, slab_shift: int,
+              arr: Optional[np.ndarray] = None, payload=None, stats=False,
+              dtype=None, nc: int = 1, params: Optional[dict] = None) -> tuple:
+    """One ``CHUNK_SCHEMA`` row: the only writer of the chunk-row format
+    (field order; ``slab = morton >> slab_shift``; the blob is
+    ``compression`` over ``encoding``, ``""``/None meaning none;
+    ``labels_stats`` holds signed labels, null above
+    ``LABELS_STATS_CAP``). :func:`decode_chunk` is its reader.
+
+    The chunk is ``arr`` (``(sx, sy, sz, nc)``, encoded here with the
+    scale's codec ``params``) or ``payload`` (bytes already in
+    ``encoding``, stored without a decode). ``stats``: False/None →
+    null; True → the chunk's distinct labels, from ``np.unique(arr)`` or the
+    codec's own ``codecs.labels`` of ``payload`` (needs ``dtype`` and
+    ``nc``; null when that codec is not installed); a list → the
+    ``labels_stats`` of a stored row holding the same voxels."""
+    if payload is None:
+        payload = codecs.encode(arr, encoding, params=params)
+    if stats is True:
+        try:
+            stats = _stats_list(np.unique(arr) if arr is not None else
+                                codecs.labels(payload, encoding,
+                                              tuple(extent.size3()) + (nc,),
+                                              dtype, params=params))
+        except codecs.EncodingUnavailable:
+            stats = None
+    elif stats is False:
+        stats = None
+    morton = int(compressed_morton_code((cx, cy, cz), grid))
+    (x0, y0, z0), (x1, y1, z1) = extent.minpt, extent.maxpt
+    return (int(mip), _slab_of(morton, slab_shift), int(cx), int(cy), int(cz),
+            morton, int(x0), int(x1), int(y0), int(y1), int(z0), int(z1),
+            encoding, compression or "",
+            codecs.compress_stream(payload, compression or None), stats)
+
+
+def decode_chunk(r, dtype=None, nc: int = 1, params: Optional[dict] = None):
+    """Decode a stored chunk row ``r`` (its extent, ``encoding``,
+    ``compression`` and ``blob``; the format :func:`chunk_row` writes)
+    into an ``(sx, sy, sz, nc)`` array of ``dtype``. Without ``dtype``,
+    the decompress-only form: the encoded payload, for partial decodes
+    and byte-exact exports."""
+    payload = codecs.decompress_stream(r.blob, r.compression or None)
+    if dtype is None:
+        return payload
+    shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
+    return codecs.decode(payload, r.encoding, shape, dtype, params=params)
+
+
+def _decode_crop(r, lo3, hi3, dtype, nc: int, params: Optional[dict]):
+    """Stored chunk row ``r`` decoded and clipped to ``[lo3, hi3)``:
+    ``(lo, hi, piece)``, or None when the two do not overlap."""
+    org = (r.x0, r.y0, r.z0)
+    lo = [max(a, b) for a, b in zip(lo3, org)]
+    hi = [min(a, b) for a, b in zip(hi3, (r.x1, r.y1, r.z1))]
+    if any(a >= b for a, b in zip(lo, hi)):
+        return None
+    arr = decode_chunk(r, dtype, nc, params)
+    return lo, hi, arr[lo[0] - org[0]:hi[0] - org[0],
+                       lo[1] - org[1]:hi[1] - org[1],
+                       lo[2] - org[2]:hi[2] - org[2], :]
 
 
 def shade(dest: np.ndarray, dest_bbox: Bbox, src: np.ndarray, src_bbox: Bbox) -> None:
@@ -205,10 +276,6 @@ def _block_reduce(arr: np.ndarray, factor, seg: bool) -> np.ndarray:
                     y0 // fy:y0 // fy + ny,
                     z0 // fz:z0 // fz + nz, :] = red
     return out
-
-
-def _slab_of(morton: int, shift: int = SLAB_SHIFT) -> int:
-    return int(morton) >> int(shift)
 
 
 class Volume:
@@ -913,21 +980,9 @@ class Volume:
             piece = arr[lo[0]:hi[0], lo[1]:hi[1], lo[2]:hi[2], :]
             if delete_black and np.all(piece == background):
                 continue
-            blob = codecs.encode(piece, encoding, params=cparams)
-            blob = codecs.compress_stream(blob, compression)
-            if seg:
-                uniq = np.unique(piece)
-                stats = _stats_list(uniq)
-            else:
-                stats = None
-            morton = int(compressed_morton_code((cx, cy, cz), grid))
-            rows.append((
-                int(mip), _slab_of(morton, slab_shift), int(cx), int(cy), int(cz), morton,
-                int(cell.minpt[0]), int(cell.maxpt[0]),
-                int(cell.minpt[1]), int(cell.maxpt[1]),
-                int(cell.minpt[2]), int(cell.maxpt[2]),
-                encoding, compression or "", bytearray(blob), stats,
-            ))
+            rows.append(chunk_row(
+                mip, cx, cy, cz, cell, encoding, compression, grid=grid,
+                slab_shift=slab_shift, arr=piece, stats=seg, params=cparams))
         return rows
 
     def _validate_upload(self, arr: np.ndarray, offset, mip: int):
@@ -2413,7 +2468,6 @@ class Volume:
         itemsize = np.dtype(dtype).itemsize
         nc = info.num_channels
         seg = info.layer_type == "segmentation"
-        comp = compression or ""
 
         def encode_blocks(batches):
             for pdf in batches:
@@ -2456,28 +2510,19 @@ class Volume:
                     cx = int((r.x0 - voff[0]) // cs[0])
                     cy = int((r.y0 - voff[1]) // cs[1])
                     cz = int((r.z0 - voff[2]) // cs[2])
-                    if encoding == "raw" and not seg:
-                        # block bytes ARE the raw encoding — skip the
-                        # decode/encode round trip entirely
-                        blob = codecs.compress_stream(r.blob, comp or None)
-                        stats = None
-                    else:
-                        arr = codecs.decode(r.blob, "raw", shape, dtype)
-                        blob = codecs.compress_stream(
-                            codecs.encode(arr, encoding, params=cparams),
-                            comp or None,
-                        )
-                        if seg:
-                            stats = _stats_list(np.unique(arr))
-                        else:
-                            stats = None
-                    morton = int(compressed_morton_code((cx, cy, cz), grid))
-                    out.append((
-                        int(mip), _slab_of(morton, slab_shift), cx, cy, cz, morton,
-                        int(r.x0), int(r.x1), int(r.y0), int(r.y1),
-                        int(r.z0), int(r.z1), encoding, comp, blob, stats,
-                    ))
-                yield pd.DataFrame(out, columns=[f.name for f in CHUNK_SCHEMA.fields])
+                    # raw image: block bytes ARE the raw encoding — skip
+                    # the decode/encode round trip entirely
+                    chunk = ({"payload": r.blob}
+                             if encoding == "raw" and not seg else
+                             {"arr": codecs.decode(r.blob, "raw", shape,
+                                                   dtype)})
+                    out.append(chunk_row(
+                        mip, cx, cy, cz,
+                        Bbox((r.x0, r.y0, r.z0), (r.x1, r.y1, r.z1)),
+                        encoding, compression, grid=grid,
+                        slab_shift=slab_shift, stats=seg, params=cparams,
+                        **chunk))
+                yield pd.DataFrame(out, columns=CHUNK_COLUMNS)
 
         rows_df = blocks.mapInPandas(encode_blocks, schema=CHUNK_SCHEMA)
         if not merge:
@@ -2783,23 +2828,12 @@ class Volume:
         cparams = self.info.compression_params(mip)
 
         def decode_shade(r):
-            piece_bbox = Bbox((r.x0, r.y0, r.z0), (r.x1, r.y1, r.z1))
-            pshape = tuple(piece_bbox.size3()) + (nc,)
-            raw = codecs.decompress_stream(r.blob, r.compression or None)
-            arr = codecs.decode(raw, r.encoding, pshape, dtype,
-                                params=cparams)
-            shade(out, bbox, arr, piece_bbox)
+            shade(out, bbox, decode_chunk(r, dtype, nc, cparams),
+                  Bbox((r.x0, r.y0, r.z0), (r.x1, r.y1, r.z1)))
 
         # chunks paint disjoint regions and gunzip/numpy release the
-        # GIL, so driver assembly threads scale near-linearly
-        if len(rows) > 4:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(16, len(rows))) as pool:
-                list(pool.map(decode_shade, rows))
-        else:
-            for r in rows:
-                decode_shade(r)
+        # GIL, so the driver pool's threads decode side by side
+        list(driver_pool().map(decode_shade, rows))
 
         if label is not None:
             return out == dtype.type(label)
@@ -2825,19 +2859,10 @@ class Volume:
             for pdf in batches:
                 out = []
                 for r in pdf.itertuples(index=False):
-                    shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                    raw = codecs.decompress_stream(r.blob, r.compression or None)
-                    arr = codecs.decode(raw, r.encoding, shape, dtype,
-                                        params=cparams)
-                    lo = [max(bxm[i], [r.x0, r.y0, r.z0][i]) for i in range(3)]
-                    hi = [min(bxM[i], [r.x1, r.y1, r.z1][i]) for i in range(3)]
-                    if any(lo[i] >= hi[i] for i in range(3)):
+                    crop = _decode_crop(r, bxm, bxM, dtype, nc, cparams)
+                    if crop is None:
                         continue
-                    piece = arr[
-                        lo[0] - r.x0:hi[0] - r.x0,
-                        lo[1] - r.y0:hi[1] - r.y0,
-                        lo[2] - r.z0:hi[2] - r.z0, :,
-                    ]
+                    lo, hi, piece = crop
                     out.append((
                         lo[0], hi[0], lo[1], hi[1], lo[2], hi[2],
                         np.ascontiguousarray(piece.transpose()).tobytes(),
@@ -2989,7 +3014,7 @@ class Volume:
                 )
             raise EmptyVolumeException(f"no chunk for voxel {xyz}")
         r = row[0]
-        raw = codecs.decompress_stream(bytes(r.blob), r.compression or None)
+        raw = decode_chunk(r)
         shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, self.info.num_channels)
         rel = (pt[0] - r.x0, pt[1] - r.y0, pt[2] - r.z0)
         return codecs.read_voxel(raw, r.encoding, shape, self.info.data_type,
@@ -3124,12 +3149,7 @@ class Volume:
             for pdf in batches:
                 frames = []
                 for r in pdf.itertuples():
-                    shape = (int(r.x1 - r.x0), int(r.y1 - r.y0),
-                             int(r.z1 - r.z0), nc)
-                    raw = codecs.decompress_stream(
-                        r.blob, r.compression or None)
-                    arr = codecs.decode(raw, r.encoding, shape, dtype,
-                                        params=cparams)
+                    arr = decode_chunk(r, dtype, nc, cparams)
                     cp = r.cell_pts
                     xs = np.array([p["x"] for p in cp], dtype=np.int64)
                     ys = np.array([p["y"] for p in cp], dtype=np.int64)
@@ -3190,8 +3210,6 @@ class Volume:
         ``approx_count_distinct`` instead of the exact set.
         """
         bbox = self._resolve_bbox(bbox_or_slices, mip)  # None = bounds
-        cs = self.info.chunk_size(mip)
-        voff = self.info.voxel_offset(mip)
         pruned = self._pruned(bbox, mip)
 
         interior = pruned.where(
@@ -3225,20 +3243,9 @@ class Volume:
             for pdf in batches:
                 vals = []
                 for r in pdf.itertuples(index=False):
-                    shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                    raw = codecs.decompress_stream(r.blob, r.compression or None)
-                    arr = codecs.decode(raw, r.encoding, shape, dtype,
-                                        params=cparams)
-                    lo = [max(bxm[i], [r.x0, r.y0, r.z0][i]) for i in range(3)]
-                    hi = [min(bxM[i], [r.x1, r.y1, r.z1][i]) for i in range(3)]
-                    if any(lo[i] >= hi[i] for i in range(3)):
-                        continue
-                    piece = arr[
-                        lo[0] - r.x0:hi[0] - r.x0,
-                        lo[1] - r.y0:hi[1] - r.y0,
-                        lo[2] - r.z0:hi[2] - r.z0, :,
-                    ]
-                    vals.append(np.unique(piece).astype(np.int64))
+                    crop = _decode_crop(r, bxm, bxM, dtype, nc, cparams)
+                    if crop is not None:
+                        vals.append(np.unique(crop[2]).astype(np.int64))
                 if vals:
                     yield pd.DataFrame({"label": np.unique(np.concatenate(vals))})
                 else:
@@ -3374,29 +3381,24 @@ class Volume:
         dtype = self.info.data_type
         nc = self.info.num_channels
         cparams = self.info.compression_params(mip)
+        grid = [int(g) for g in self.info.grid_shape(mip)]
+        slab_shift = self.slab_shift
 
         def rewrite(batches):
             m = bmap.value
             for pdf in batches:
                 rows = []
                 for r in pdf.itertuples(index=False):
-                    shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                    raw = codecs.decompress_stream(r.blob, r.compression or None)
-                    arr = codecs.decode(raw, r.encoding, shape, dtype,
-                                        params=cparams)
-                    arr = codecs.remap_array(arr, m, preserve_missing=preserve_missing)
-                    blob = codecs.compress_stream(
-                        codecs.encode(arr, r.encoding, params=cparams),
-                        r.compression or None,
-                    )
-                    uniq = np.unique(arr)
-                    stats = _stats_list(uniq)
-                    rows.append((
-                        r.mip, r.slab, r.cx, r.cy, r.cz, r.morton,
-                        r.x0, r.x1, r.y0, r.y1, r.z0, r.z1,
-                        r.encoding, r.compression, blob, stats,
-                    ))
-                yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
+                    arr = codecs.remap_array(
+                        decode_chunk(r, dtype, nc, cparams), m,
+                        preserve_missing=preserve_missing)
+                    rows.append(chunk_row(
+                        r.mip, r.cx, r.cy, r.cz,
+                        Bbox((r.x0, r.y0, r.z0), (r.x1, r.y1, r.z1)),
+                        r.encoding, r.compression, grid=grid,
+                        slab_shift=slab_shift, arr=arr, stats=True,
+                        params=cparams))
+                yield pd.DataFrame(rows, columns=CHUNK_COLUMNS)
 
         # full-mip rewrite committed as a snapshot generation that
         # REPLACES every previous entry of this mip; lock held
@@ -3404,7 +3406,6 @@ class Volume:
         # clear the point-read LRU or it would serve stale pre-remap
         # labels afterwards
         self._lru_clear()
-        fs = self._fs
         with self._commit_lock():
             man0 = self._read_manifest()
             src = self.chunks_df(mip=int(mip), manifest=man0)
@@ -3516,7 +3517,6 @@ class Volume:
         encoding = info.encoding(to_mip)
         src_params = info.compression_params(from_mip)
         dst_params = info.compression_params(to_mip)
-        comp = compression or ""
         fx, fy, fz = (int(f) for f in factor)
 
         def build_src(man0):
@@ -3550,10 +3550,7 @@ class Volume:
             # must agree with what cutout(fill) serves at the base mip
             out = np.full(tuple(cell.size3()) + (nc,), bg_value, dtype=dtype)
             for r in pdf.itertuples(index=False):
-                shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                raw = codecs.decompress_stream(r.blob, r.compression or None)
-                arr = codecs.decode(raw, r.encoding, shape, dtype,
-                                    params=src_params)
+                arr = decode_chunk(r, dtype, nc, src_params)
                 # mean (images) / mode (segmentations) per block, with
                 # partial edge blocks reduced over present voxels
                 red = _block_reduce(arr, (fx, fy, fz), seg)
@@ -3563,21 +3560,10 @@ class Volume:
                      r.z0 // fz + red.shape[2]),
                 )
                 shade(out, cell, red, child)
-            blob = codecs.compress_stream(
-                codecs.encode(out, encoding, params=dst_params), comp or None)
-            if seg:
-                uniq = np.unique(out)
-                stats = _stats_list(uniq)
-            else:
-                stats = None
-            morton = int(compressed_morton_code((tcx, tcy, tcz), grid_to))
-            return pd.DataFrame([(
-                int(to_mip), _slab_of(morton, slab_shift), tcx, tcy, tcz, morton,
-                int(cell.minpt[0]), int(cell.maxpt[0]),
-                int(cell.minpt[1]), int(cell.maxpt[1]),
-                int(cell.minpt[2]), int(cell.maxpt[2]),
-                encoding, comp, blob, stats,
-            )], columns=[f.name for f in CHUNK_SCHEMA.fields])
+            return pd.DataFrame([chunk_row(
+                to_mip, tcx, tcy, tcz, cell, encoding, compression,
+                grid=grid_to, slab_shift=slab_shift, arr=out, stats=seg,
+                params=dst_params)], columns=CHUNK_COLUMNS)
 
         # lock covers the from_mip source listing (spark.read.parquet
         # captures the file index eagerly) as well as the to_mip swap, so
@@ -3804,41 +3790,30 @@ class Volume:
         dest = Volume.create(self.spark, dest_base, dst_info,
                              slab_shift=self.slab_shift)
 
-        src_enc = self.info.encoding(mip)
         src_params = self.info.compression_params(mip)
         dst_params = dst_info.compression_params(mip)
         dtype = self.info.data_type
         nc = self.info.num_channels
+        grid = [int(g) for g in self.info.grid_shape(mip)]
+        slab_shift = self.slab_shift
         comp = compression or ""
-        needs_transcode = (
-            (dst_enc != src_enc) or ((comp or None) != None)
-            or (encoding_level is not None)
-        )
 
         def transcode(batches):
             for pdf in batches:
-                rows = []
-                for r in pdf.itertuples(index=False):
-                    if (r.encoding == dst_enc and (r.compression or "") == comp
-                            and encoding_level is None):
-                        blob = r.blob
-                        stats = r.labels_stats
-                    else:
-                        shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                        raw = codecs.decompress_stream(r.blob, r.compression or None)
-                        arr = codecs.decode(raw, r.encoding, shape, dtype,
-                                            params=src_params)
-                        blob = codecs.compress_stream(
-                            codecs.encode(arr, dst_enc, params=dst_params),
-                            comp or None,
-                        )
-                        stats = r.labels_stats
-                    rows.append((
-                        r.mip, r.slab, r.cx, r.cy, r.cz, r.morton,
-                        r.x0, r.x1, r.y0, r.y1, r.z0, r.z1,
-                        dst_enc, comp, blob, stats,
-                    ))
-                yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
+                # a row already in the destination format is copied as
+                # stored; the rest re-encode with their stats kept
+                yield pd.DataFrame([
+                    r if (r.encoding == dst_enc
+                          and (r.compression or "") == comp
+                          and encoding_level is None)
+                    else chunk_row(
+                        r.mip, r.cx, r.cy, r.cz,
+                        Bbox((r.x0, r.y0, r.z0), (r.x1, r.y1, r.z1)),
+                        dst_enc, comp, grid=grid, slab_shift=slab_shift,
+                        arr=decode_chunk(r, dtype, nc, src_params),
+                        stats=r.labels_stats, params=dst_params)
+                    for r in pdf[CHUNK_COLUMNS].itertuples(index=False)
+                ], columns=CHUNK_COLUMNS)
 
         out = self._pruned(bbox, mip).mapInPandas(transcode, schema=CHUNK_SCHEMA)
         dest._overwrite_slabs(out)
@@ -3968,7 +3943,6 @@ class Volume:
         seg = info.layer_type == "segmentation"
         encoding = self.info.encoding(mip)
         cparams = self.info.compression_params(mip)
-        comp = compression or ""
 
         piece_schema = StructType([
             StructField("tcx", IntegerType(), False),
@@ -3987,10 +3961,7 @@ class Volume:
             for pdf in batches:
                 rows = []
                 for r in pdf.itertuples(index=False):
-                    shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                    raw = codecs.decompress_stream(r.blob, r.compression or None)
-                    arr = codecs.decode(raw, r.encoding, shape, dtype,
-                                        params=cparams)
+                    arr = decode_chunk(r, dtype, nc, cparams)
                     src_bbox = Bbox((r.x0, r.y0, r.z0), (r.x1, r.y1, r.z1))
                     for (tcx, tcy, tcz) in src_bbox.grid_coords(cs_to, voff):
                         cell = Bbox.from_delta(
@@ -4029,22 +4000,10 @@ class Volume:
                     pshape[::-1]
                 ).transpose()
                 shade(out, cell, arr, pb)
-            blob = codecs.compress_stream(
-                codecs.encode(out, encoding, params=cparams), comp or None)
-            if seg:
-                uniq = np.unique(out)
-                stats = _stats_list(uniq)
-            else:
-                stats = None
-            morton = int(compressed_morton_code((tcx, tcy, tcz), grid_to))
-            return pd.DataFrame([(
-                int(mip), _slab_of(morton, slab_shift), tcx, tcy, tcz,
-                morton,
-                int(cell.minpt[0]), int(cell.maxpt[0]),
-                int(cell.minpt[1]), int(cell.maxpt[1]),
-                int(cell.minpt[2]), int(cell.maxpt[2]),
-                encoding, comp, blob, stats,
-            )], columns=[f.name for f in CHUNK_SCHEMA.fields])
+            return pd.DataFrame([chunk_row(
+                mip, tcx, tcy, tcz, cell, encoding, compression,
+                grid=grid_to, slab_shift=slab_shift, arr=out, stats=seg,
+                params=cparams)], columns=CHUNK_COLUMNS)
 
         src = self.chunks_df().where(F.col("mip") == int(mip))
         pieces = src.mapInPandas(split_pieces, schema=piece_schema)

@@ -21,7 +21,11 @@ volumes between that and the standard on-disk layouts:
   fastest; edge blocks are clamped, not padded.
 
 Both directions are Spark jobs: the driver lists names, executors do
-all payload IO/transcode — the same pattern as precomputed_io.
+all payload IO/transcode — the same pattern as precomputed_io. Imports
+hand each decoded block to :func:`~cloud_volume_spark.volume.chunk_row`
+(stored ``raw``); exports decode with
+:func:`~cloud_volume_spark.volume.decode_chunk`. Neither touches the
+chunk-row format itself.
 """
 
 from __future__ import annotations
@@ -35,11 +39,10 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 
-from cloud_volume_spark import codecs as cvs_codecs
 from cloud_volume_spark.catalog import VolumeInfo
-from cloud_volume_spark.chunking import compressed_morton_code
+from cloud_volume_spark.geometry import Bbox
 from cloud_volume_spark.volume import (
-    CHUNK_SCHEMA, LABELS_STATS_CAP, Volume, _slab_of,
+    CHUNK_COLUMNS, CHUNK_SCHEMA, Volume, chunk_row, decode_chunk,
 )
 
 # --------------------------------------------------------------------------
@@ -382,20 +385,16 @@ def export_zarr3(vol: Volume, out_dir: str, mip: int = 0,
         json.dump(array_meta, f, indent=2)
 
     mip_dir = os.path.join(out_dir, str(mip))
-    chunk_dims = (nc, cs[2], cs[1], cs[0])
 
     def write_chunks(batches):
         n = 0
         for pdf in batches:
             for r in pdf.itertuples(index=False):
-                shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                raw = cvs_codecs.decompress_stream(r.blob, r.compression or None)
-                arr = cvs_codecs.decode(raw, r.encoding, shape, dtype,
-                                         params=cparams)
+                arr = decode_chunk(r, dtype, nc, cparams)
                 # zarr stores edge chunks padded to full chunk shape
-                if shape[:3] != tuple(cs):
+                if arr.shape[:3] != tuple(cs):
                     full = np.full(tuple(cs) + (nc,), bg, dtype=dtype)
-                    full[:shape[0], :shape[1], :shape[2], :] = arr
+                    full[:arr.shape[0], :arr.shape[1], :arr.shape[2], :] = arr
                     arr = full
                 # (x,y,z,c) → C-order (c,z,y,x)
                 czyx = np.ascontiguousarray(arr.transpose(3, 2, 1, 0))
@@ -543,7 +542,6 @@ def import_zarr3(spark, src_dir: str, base_path: str,
 
     grid = [int(g) for g in info.grid_shape(0)]
     seg = layer_type == "segmentation"
-    comp = compression or ""
 
     files_df = spark.createDataFrame(
         entries, schema="path string, key string"
@@ -588,26 +586,11 @@ def import_zarr3(spark, src_dir: str, base_path: str,
                 arr = np.asfortranarray(
                     arr[: x1 - x0, : y1 - y0, : z1 - z0, :]
                 )
-                raw = cvs_codecs.encode(arr, "raw")
-                blob = cvs_codecs.compress_stream(raw, comp or None)
-                morton = int(compressed_morton_code(
-                    (ci["x"], ci["y"], ci["z"]), grid
-                ))
-                if seg:
-                    uniq = np.unique(arr)
-                    stats = (
-                        [int(u) for u in uniq]
-                        if uniq.size <= LABELS_STATS_CAP else None
-                    )
-                else:
-                    stats = None
-                rows.append((
-                    0, _slab_of(morton, slab_shift), ci["x"], ci["y"], ci["z"], morton,
-                    x0, x1, y0, y1, z0, z1, "raw", comp, blob, stats,
-                ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CHUNK_SCHEMA.fields]
-            )
+                rows.append(chunk_row(
+                    0, ci["x"], ci["y"], ci["z"],
+                    Bbox((x0, y0, z0), (x1, y1, z1)), "raw", compression,
+                    grid=grid, slab_shift=slab_shift, arr=arr, stats=seg))
+            yield pd.DataFrame(rows, columns=CHUNK_COLUMNS)
 
     vol._overwrite_slabs(files_df.mapInPandas(read_chunks, schema=CHUNK_SCHEMA))
     return vol
@@ -656,13 +639,10 @@ def export_zarr2(vol: Volume, out_dir: str, mip: int = 0,
         n = 0
         for pdf in batches:
             for r in pdf.itertuples(index=False):
-                shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                raw = cvs_codecs.decompress_stream(r.blob, r.compression or None)
-                arr = cvs_codecs.decode(raw, r.encoding, shape, dtype,
-                                         params=cparams)
-                if shape[:3] != tuple(cs):
+                arr = decode_chunk(r, dtype, nc, cparams)
+                if arr.shape[:3] != tuple(cs):
                     full = np.full(tuple(cs) + (nc,), bg, dtype=dtype)
-                    full[:shape[0], :shape[1], :shape[2], :] = arr
+                    full[:arr.shape[0], :arr.shape[1], :arr.shape[2], :] = arr
                     arr = full
                 czyx = np.ascontiguousarray(arr.transpose(3, 2, 1, 0))
                 payload = zlib.compress(czyx.tobytes(order="C"), level)
@@ -764,7 +744,6 @@ def import_zarr2(spark, src_dir: str, base_path: str,
         return vol
     grid = [int(g) for g in info.grid_shape(0)]
     seg = layer_type == "segmentation"
-    comp = compression or ""
 
     files_df = spark.createDataFrame(
         [(os.path.join(src_dir, n), n) for n in names],
@@ -805,26 +784,11 @@ def import_zarr2(spark, src_dir: str, base_path: str,
                 arr = np.asfortranarray(
                     arr[: x1 - x0, : y1 - y0, : z1 - z0, :]
                 )
-                raw = cvs_codecs.encode(arr, "raw")
-                blob = cvs_codecs.compress_stream(raw, comp or None)
-                morton = int(compressed_morton_code(
-                    (ci["x"], ci["y"], ci["z"]), grid
-                ))
-                if seg:
-                    uniq = np.unique(arr)
-                    stats = (
-                        [int(u) for u in uniq]
-                        if uniq.size <= LABELS_STATS_CAP else None
-                    )
-                else:
-                    stats = None
-                rows.append((
-                    0, _slab_of(morton, slab_shift), ci["x"], ci["y"], ci["z"], morton,
-                    x0, x1, y0, y1, z0, z1, "raw", comp, blob, stats,
-                ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CHUNK_SCHEMA.fields]
-            )
+                rows.append(chunk_row(
+                    0, ci["x"], ci["y"], ci["z"],
+                    Bbox((x0, y0, z0), (x1, y1, z1)), "raw", compression,
+                    grid=grid, slab_shift=slab_shift, arr=arr, stats=seg))
+            yield pd.DataFrame(rows, columns=CHUNK_COLUMNS)
 
     vol._overwrite_slabs(files_df.mapInPandas(read_chunks, schema=CHUNK_SCHEMA))
     return vol
@@ -870,13 +834,8 @@ def export_n5(vol: Volume, out_dir: str, mip: int = 0,
         n = 0
         for pdf in batches:
             for r in pdf.itertuples(index=False):
-                shape = (r.x1 - r.x0, r.y1 - r.y0, r.z1 - r.z0, nc)
-                raw = cvs_codecs.decompress_stream(
-                    r.blob, r.compression or None
-                )
-                arr = cvs_codecs.decode(raw, r.encoding, shape, dtype,
-                                         params=cparams)
-                bdims = list(shape[:3]) + ([nc] if nc > 1 else [])
+                arr = decode_chunk(r, dtype, nc, cparams)
+                bdims = list(arr.shape[:3]) + ([nc] if nc > 1 else [])
                 header = (
                     (0).to_bytes(2, "big")
                     + ndim.to_bytes(2, "big")
@@ -949,7 +908,6 @@ def import_n5(spark, src_dir: str, base_path: str, mip: int = 0,
 
     grid = [int(g) for g in info.grid_shape(0)]
     seg = layer_type == "segmentation"
-    comp = compression or ""
 
     files_df = spark.createDataFrame(
         [(p,) for p in paths], schema="path string"
@@ -997,24 +955,11 @@ def import_n5(spark, src_dir: str, base_path: str, mip: int = 0,
                 x0, y0, z0 = cx * cs3[0], cy * cs3[1], cz * cs3[2]
                 x1, y1, z1 = x0 + dims[0], y0 + dims[1], z0 + dims[2]
                 arr = np.asfortranarray(arr)
-                raw = cvs_codecs.encode(arr, "raw")
-                blob = cvs_codecs.compress_stream(raw, comp or None)
-                morton = int(compressed_morton_code((cx, cy, cz), grid))
-                if seg:
-                    uniq = np.unique(arr)
-                    stats = (
-                        [int(u) for u in uniq]
-                        if uniq.size <= LABELS_STATS_CAP else None
-                    )
-                else:
-                    stats = None
-                rows.append((
-                    0, _slab_of(morton, slab_shift), cx, cy, cz, morton,
-                    x0, x1, y0, y1, z0, z1, "raw", comp, blob, stats,
-                ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CHUNK_SCHEMA.fields]
-            )
+                rows.append(chunk_row(
+                    0, cx, cy, cz, Bbox((x0, y0, z0), (x1, y1, z1)), "raw",
+                    compression, grid=grid, slab_shift=slab_shift, arr=arr,
+                    stats=seg))
+            yield pd.DataFrame(rows, columns=CHUNK_COLUMNS)
 
     vol._overwrite_slabs(files_df.mapInPandas(read_blocks, schema=CHUNK_SCHEMA))
     return vol
